@@ -33,7 +33,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   *    merges deltas at read time (last write per group key wins) and the
   *    engine folds the log ONLINE every `autoCompactEvery` batches
   *    (versioned dirs + atomic pointer — no consumer stop; see
-  *    [[compactViewTable]]). Per-trigger sink cost is
+  *    [[compactViewTable]]). The fold runs OFF the trigger path: the
+  *    cadence trigger hands it to one engine-owned background thread and
+  *    returns, and the view's appends wait only for the fold's short
+  *    carry-and-flip step, never for its merge. Per-trigger sink cost is
   *    O(groups touched by the batch), never O(all groups) — PipelineDB's
   *    in-place CV update semantics (README.md:78-88) at Spark scale.
   *    Appends are atomic (each delta file appears wholesale), so readers
@@ -99,6 +102,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   // memory-materialized views: the current cached snapshot per view, kept
   // so the previous generation can be unpersisted after each swap
   private val memSnaps = mutable.Map[String, DataFrame]()
+  // views already warned about a malformed graft.view.delta.files value
+  private val deltaFilesWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private var nextId = 1
 
   Files.createDirectories(Paths.get(metaDir))
@@ -270,6 +275,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       dead.foreach(_.stop())
       if (dead.nonEmpty) running(id) = alive
     }
+    awaitFolds() // a fold still writing would recreate the dirs dropped below
+    foldFailures.remove(name) // not a later view's of the same name
     if (removed.exists(_.materialize == "memory")) {
       memSnaps.synchronized(memSnaps.remove(name))
         .foreach(_.unpersist(blocking = false))
@@ -305,6 +312,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       dead.foreach(_.stop())
       if (dead.nonEmpty) running(id) = alive
     }
+    awaitFolds()
   }
 
   /** ACTIVATE parity: clear the inactive flag and re-attach the view to
@@ -338,6 +346,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     synchronized {
       consumers.get((endpoint, stream, relation)).foreach { c =>
         require(!running.contains(c.id), "consume_end first")
+        awaitFolds()
         consumers.remove((endpoint, stream, relation))
         saveCatalog()
         rmTree(Paths.get(metaDir, "checkpoints", c.id.toString).toFile)
@@ -511,25 +520,12 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * this automatically for sliding views on the auto-compaction cadence,
     * so standing state is bounded by the live window (O(width/slide ×
     * keys)), never O(stream history), on a query that runs forever.
-    * ONLINE like [[compactViewTable]]: versioned rewrite + pointer swap,
-    * safe while the view's query runs. */
+    * The same online fold as [[compactViewTable]], with the live-bucket
+    * filter applied to the merged rows. */
   def expireSlidingViewTable(name: String, targetPartitions: Int = 8): Unit = {
     val width = readSwMeta(name).width
-    viewLock(name).synchronized {
-      val curDir = viewDeltaDir(name)
-      if (!Files.exists(Paths.get(curDir))) return
-      val v = Paths.get(curDir).getFileName.toString.stripPrefix("delta-").toLong
-      val delta = readDeltaLog(curDir)
-      val maxRow = delta.agg(max("__batch")).head()
-      if (maxRow.isNullAt(0)) return // only empty batches so far
-      mergeDeltas(delta, readViewMeta(name))
-        .filter(col("__bucket.end") > current_timestamp() - expr(s"INTERVAL $width"))
-        .withColumn("__batch", lit(maxRow.getLong(0)))
-        .repartition(targetPartitions)
-        .write.mode("overwrite").parquet(s"$metaDir/views/$name/delta-${v + 1}")
-      writeAtomic(viewPtrPath(name), s"delta-${v + 1}")
-      dropDeltaVersionsBelow(name, v)
-    }
+    foldView(name, targetPartitions,
+      _.filter(col("__bucket.end") > current_timestamp() - expr(s"INTERVAL $width")))
   }
 
   /** PipelineDB output streams (`SELECT … FROM output_of('v')`,
@@ -769,15 +765,56 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   // Versioned delta layout: views/<name>/delta-<v>/ plus a `_graft_current`
-  // pointer file naming the live version. Appends and compactions for one
-  // view serialize on a per-view lock; readers resolve the pointer
-  // lock-free. Compaction writes the folded log as version v+1, swaps the
-  // pointer atomically, and deletes versions ≤ v−1 — the immediately
-  // previous version survives one compaction cycle as a grace window for
-  // in-flight readers, so compacting does NOT require stopping consumers.
+  // pointer file naming the live version. Appends take a per-view lock;
+  // readers resolve the pointer lock-free. A fold (see [[foldView]])
+  // holds that lock only to snapshot delta-<v> and, later, to carry what
+  // was appended meanwhile into v+1 and swap the pointer; it deletes
+  // versions ≤ v−1 — the immediately previous version survives one fold
+  // cycle as a grace window for in-flight readers, so folding does NOT
+  // require stopping consumers. Folds of one view serialize on a
+  // separate per-view fold lock that appends never take.
   private val viewLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def viewLock(name: String): Object =
     viewLocks.computeIfAbsent(name, _ => new Object)
+  private def foldLock(name: String): Object =
+    viewLocks.computeIfAbsent(s"fold:$name", _ => new Object)
+
+  // Cadence folds run on ONE engine-owned thread, created on demand and
+  // retired after 10 s idle. It is built without inheriting thread-locals:
+  // the submitting stream thread carries Spark local properties (its SQL
+  // execution id, streaming query id, job description) that must not leak
+  // onto the fold's jobs.
+  private val foldPool = new java.util.concurrent.ThreadPoolExecutor(
+    0, 1, 10L, java.util.concurrent.TimeUnit.SECONDS,
+    new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+    (r: Runnable) => new Thread(null, r, "graft-view-fold", 0L, false)
+      .tap(_.setDaemon(true)))
+  // per view: the fold handed to the pool and not yet finished, and the
+  // failure of the last one, rethrown by the view's next cadence trigger
+  private val foldsInFlight =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.Future[_]]()
+  private val foldFailures = new java.util.concurrent.ConcurrentHashMap[String, Throwable]()
+
+  /** The cadence hook of a view trigger: rethrow the view's last failed
+    * fold (failing the query, as an inline fold would have), else hand
+    * `fold` to the fold thread and return at once — unless the view's
+    * previous fold is still in flight, in which case this cadence skips. */
+  private def scheduleFold(name: String)(fold: => Unit): Unit = {
+    Option(foldFailures.remove(name)).foreach(e => throw e)
+    if (Option(foldsInFlight.get(name)).forall(_.isDone))
+      foldsInFlight.put(name, foldPool.submit((() =>
+        try fold catch { case e: Throwable =>
+          log.error(s"background fold of view '$name' failed; its next " +
+            "cadence trigger rethrows", e)
+          foldFailures.put(name, e)
+        }): Runnable))
+  }
+
+  /** Block until every fold handed to the fold thread has finished — the
+    * engine's sync points (processAllAvailable, consumeEnd…) call this so
+    * their callers see a finished fold. Failures stay queued for the
+    * view's next cadence trigger. */
+  private def awaitFolds(): Unit = foldsInFlight.values.forEach(_.get())
 
   private def viewPtrPath(name: String) = Paths.get(metaDir, "views", name, "_graft_current")
 
@@ -792,10 +829,13 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   /** The read-time merge: newest write per group key wins (keys from the
-    * view meta; None = stateless append, Nil = global aggregate). */
-  private def mergeDeltas(delta: DataFrame, keysOpt: Option[Seq[String]]): DataFrame =
+    * view meta; None = stateless append, Nil = global aggregate).
+    * `keepBatch` keeps each surviving row's own `__batch` stamp — the
+    * fold's output, so deltas written after the fold still win. */
+  private def mergeDeltas(delta: DataFrame, keysOpt: Option[Seq[String]],
+                          keepBatch: Boolean = false): DataFrame =
     keysOpt match {
-      case None => delta.drop("__batch")
+      case None => if (keepBatch) delta else delta.drop("__batch")
       case Some(keys)
           if keys.nonEmpty && delta.columns.length > keys.length + 1 &&
             graft.Opt.on(spark) =>
@@ -814,7 +854,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         // arbitrary tie pick equals the window's arbitrary row_number
         // pick. Payload-less deltas (no non-key column) fall through to
         // the window path below rather than build an empty struct.
-        val out = delta.columns.filterNot(_ == "__batch").toSeq
+        val out = delta.columns.filterNot(_ == "__batch").toSeq ++
+          (if (keepBatch) Seq("__batch") else Nil)
         val payload = out.filterNot(keys.contains)
         delta.groupBy(keys.map(col): _*)
           .agg(max_by(struct(payload.map(col): _*), col("__batch"))
@@ -828,8 +869,9 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         // is a handful of rows, not a scale hazard.
         val w = if (keys.isEmpty) Window.orderBy(col("__batch").desc)
                 else Window.partitionBy(keys.map(col): _*).orderBy(col("__batch").desc)
-        delta.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn", "__batch")
+        val newest = delta.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        if (keepBatch) newest else newest.drop("__batch")
     }
 
   /** A view's current delta log. Merge-mode deltas are flat appended
@@ -857,29 +899,99 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * log automatically every `autoCompactEvery` batches (and
     * [[compactViewTable]] can be called any time, consumers running or
     * not). */
-  def viewTable(name: String): DataFrame =
-    mergeDeltas(readDeltaLog(viewDeltaDir(name)), readViewMeta(name))
+  def viewTable(name: String): DataFrame = {
+    val keysOpt = readViewMeta(name)
+    val curDir = viewDeltaDir(name)
+    // before the view's first commit the delta dir holds no data to infer
+    // a schema from: serve the empty view in the schema recorded at
+    // consumeBegin
+    val schemaPath = viewSchemaPath(name)
+    if (!listDir(Paths.get(curDir)).exists(committedLeaves(_).nonEmpty) &&
+        Files.exists(schemaPath))
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.DataType.fromJson(Files.readString(schemaPath))
+          .asInstanceOf[StructType])
+    else mergeDeltas(readDeltaLog(curDir), keysOpt)
+  }
 
-  /** Fold a view's delta log down to one merged snapshot (keeping the
-    * highest batch id so future deltas still win the merge). ONLINE: safe
-    * while the view's query runs — appends serialize on the per-view
-    * lock, readers keep the one-version grace window. */
+  private def viewSchemaPath(name: String) = Paths.get(metaDir, "views", name, "_graft_schema")
+
+  /** The parquet files a delta-dir entry commits: a `part-*` file is its
+    * own, a `b<stamp>` batch subdir (append-mode views) holds its batch's
+    * files — none while a failed batch write left it empty for its replay
+    * to fill. Anything else (`_SUCCESS`, checksums, a write's
+    * `_temporary`) commits nothing. */
+  private def committedLeaves(p: java.nio.file.Path): Seq[String] = {
+    val n = p.getFileName.toString
+    if (n.startsWith("part-")) Seq(n)
+    else if (n.startsWith("b") && Files.isDirectory(p))
+      listDir(p).map(_.getFileName.toString).filter(_.startsWith("part-"))
+    else Nil
+  }
+
+  /** Fold a view's delta log down to one merged snapshot, each row keeping
+    * its own newest `__batch` so future deltas still win the merge.
+    * ONLINE: safe while the view's query runs — its appends wait only for
+    * the fold's carry-and-flip step, and readers keep the one-version
+    * grace window. The engine runs this same routine on the cadence, on
+    * its fold thread; a direct call runs it on the caller's thread. */
   def compactViewTable(name: String, targetPartitions: Int = 8): Unit =
-    viewLock(name).synchronized {
-      val curDir = viewDeltaDir(name)
-      if (!Files.exists(Paths.get(curDir))) return // nothing materialized yet
-      val v = Paths.get(curDir).getFileName.toString.stripPrefix("delta-").toLong
-      val delta = readDeltaLog(curDir)
-      val maxRow = delta.agg(max("__batch")).head()
-      if (maxRow.isNullAt(0)) return // only empty batches so far
-      val maxB = maxRow.getLong(0)
-      mergeDeltas(delta, readViewMeta(name))
-        .withColumn("__batch", lit(maxB))
-        .repartition(targetPartitions)
-        .write.mode("overwrite").parquet(s"$metaDir/views/$name/delta-${v + 1}")
-      writeAtomic(viewPtrPath(name), s"delta-${v + 1}")
-      writeAtomic(foldedPath(name), maxB.toString)
-      dropDeltaVersionsBelow(name, v)
+    foldView(name, targetPartitions, identity)
+
+  /** The one fold routine behind [[compactViewTable]] and
+    * [[expireSlidingViewTable]] (`keep` filters the merged rows):
+    *  1. snapshot — under the view lock, resolve delta-v and list its
+    *     committed entries;
+    *  2. merge — outside the lock, fold exactly those entries into
+    *     delta-(v+1) with one shuffle: hash-repartition on the merge keys,
+    *     then newest row per key within each partition (a global
+    *     aggregate keeps its single-partition window);
+    *  3. carry and flip — under the view lock again, hard-link every entry
+    *     appended to delta-v since the snapshot into delta-(v+1), swap the
+    *     pointer, record the fold high-water mark (append-mode views) and
+    *     grace-delete versions below v.
+    * Its jobs run under the job group `graft-fold:<view>`. */
+  private def foldView(name: String, targetPartitions: Int,
+                       keep: DataFrame => DataFrame): Unit =
+    foldLock(name).synchronized {
+      val (cur, snap) = viewLock(name).synchronized {
+        val cur = Paths.get(viewDeltaDir(name))
+        (cur, listDir(cur).map(p => p.getFileName.toString -> committedLeaves(p))
+          .filter(_._2.nonEmpty).toMap)
+      }
+      if (snap.isEmpty) return // nothing materialized yet
+      val v = cur.getFileName.toString.stripPrefix("delta-").toLong
+      val next = cur.resolveSibling(s"delta-${v + 1}")
+      val keysOpt = readViewMeta(name)
+      // the directory read lists delta-v once (a file list would cost a
+      // parallel listing job past 32 files); the file-name filter pins the
+      // scan to the snapshot — part-file names are unique per write job
+      val delta = readDeltaLog(cur.toString)
+        .where(col("_metadata.file_name").isin(snap.values.flatten.toSeq: _*))
+      val merged = keysOpt match {
+        case Some(keys) if keys.nonEmpty =>
+          mergeDeltas(delta.repartition(targetPartitions, keys.map(col): _*),
+            keysOpt, keepBatch = true)
+        case Some(_) => mergeDeltas(delta, keysOpt, keepBatch = true)
+        case None => delta.repartition(targetPartitions)
+      }
+      val sc = spark.sparkContext
+      val groupProps = Seq("spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel")
+      val prior = groupProps.map(k => k -> sc.getLocalProperty(k))
+      sc.setJobGroup(s"graft-fold:$name", s"fold view $name")
+      try keep(merged).write.mode("overwrite").parquet(next.toString)
+      finally prior.foreach { case (k, p) => sc.setLocalProperty(k, p) }
+      viewLock(name).synchronized {
+        listDir(cur).filter(p => !snap.contains(p.getFileName.toString) &&
+            committedLeaves(p).nonEmpty)
+          .foreach(p => linkTree(p, next.resolve(p.getFileName.toString)))
+        writeAtomic(viewPtrPath(name), next.getFileName.toString)
+        if (keysOpt.isEmpty)
+          snap.keys.filter(_.matches("b\\d+")).map(_.tail.toLong).maxOption
+            .foreach(s => writeAtomic(foldedPath(name), s.toString))
+        dropDeltaVersionsBelow(name, v)
+      }
     }
 
   /** Delete delta versions strictly below `keepFrom` (grace cleanup). */
@@ -1234,7 +1346,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       qs.foreach(q => if (q.isActive) q.stop())
       synchronized { running.remove(id) }
       throw e
-    }
+    } finally awaitFolds()
     synchronized {
       if (running.get(id).exists(_.forall(q => !q.isActive))) running.remove(id)
     }
@@ -1310,6 +1422,9 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         log.warn(s"view '$vname' is already maintained from another consumer " +
           s"of '$relation'; consumer ${c.id} feeds only the stream table")
     }
+    // a (re)started view query may replay its last batch, which rewrites
+    // that batch's delta: never under a fold still reading it
+    if (wanted.nonEmpty) awaitFolds()
     if (!haveNames.contains(s"${relation}__table__${c.id}") || wanted.nonEmpty) {
       val df = parsedStream(c, ep.url)
       // B4: every parsed row also lands in the persistent stream table —
@@ -1425,6 +1540,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
               if (v.materialize == "append" || hasSessionWindow) None
               else v.keys.orElse(inferViewKeys(aggDf))
             writeViewMeta(vname, keysOpt)
+            writeAtomic(viewSchemaPath(vname), aggDf.schema.json)
             // Generation epoch: deltas are stamped (gen << 40) | batchId.
             // A query attaching with a FRESH checkpoint (no offsets — e.g.
             // the consumer was removed and re-created, which deletes its
@@ -1466,12 +1582,17 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 // physical planning of the micro-batch via rdd access on
                 // every trigger; the knob parse is clamped/safe so a
                 // malformed session value degrades to the default
-                // instead of failing the stream mid-trigger.
+                // instead of failing the stream mid-trigger — with one
+                // warning per view, so the fallback is visible.
                 lazy val packed = {
-                  val deltaFiles = math.max(1,
-                    scala.util.Try(spark.conf
-                      .get("graft.view.delta.files", "8").trim.toInt)
-                      .getOrElse(8))
+                  val raw = spark.conf.get("graft.view.delta.files", "8")
+                  val deltaFiles = raw.trim.toIntOption.map(math.max(1, _))
+                    .getOrElse {
+                      if (deltaFilesWarned.add(vname))
+                        log.warn(s"view '$vname': graft.view.delta.files = " +
+                          s"'$raw' is not an integer; packing deltas into 8 files")
+                      8
+                    }
                   if (graft.Opt.on(spark) &&
                       batch.rdd.getNumPartitions > deltaFiles)
                     batch.coalesce(deltaFiles)
@@ -1514,12 +1635,14 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 // online fold: bounds read-time merge cost to
                 // O(groups + autoCompactEvery batch deltas) on a stream
                 // that never stops; sliding views additionally drop
-                // aged-out buckets in the same rewrite
+                // aged-out buckets in the same rewrite. Handed to the
+                // fold thread — this trigger returns without waiting.
                 if (autoCompactEvery > 0 && batchId > 0 &&
-                    batchId % autoCompactEvery == 0) {
-                  if (isSw) expireSlidingViewTable(vname)
-                  else compactViewTable(vname)
-                }
+                    batchId % autoCompactEvery == 0)
+                  scheduleFold(vname) {
+                    if (isSw) expireSlidingViewTable(vname)
+                    else compactViewTable(vname)
+                  }
               }
         }
         writer.option("checkpointLocation",
@@ -1536,6 +1659,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     consumers.get((endpoint, stream, relation)).foreach { c =>
       running.remove(c.id).foreach(_.foreach(_.stop())) // D3: graceful stop
     }
+    awaitFolds()
   }
 
   def consumeBeginAll(): Unit =
@@ -1545,13 +1669,18 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
 
   def consumeEndAll(): Unit = synchronized {
     running.values.flatten.foreach(_.stop()); running.clear() // D4
+    awaitFolds()
   }
 
   def activeQueries: Seq[StreamingQuery] = synchronized(running.values.flatten.toSeq)
 
   /** Block until every running view has processed all currently-available
-    * records (test/demo synchronization point). */
-  def processAllAvailable(): Unit = activeQueries.foreach(_.processAllAvailable())
+    * records and the folds those triggers started have finished
+    * (test/demo synchronization point). */
+  def processAllAvailable(): Unit = {
+    activeQueries.foreach(_.processAllAvailable())
+    awaitFolds()
+  }
 
   // --- SQL front-end (the reference's actual UX) ---------------------------
 

@@ -351,6 +351,200 @@ class EngineScaleSpec extends SparkSpec {
     eng.consumeEndAll()
   }
 
+  /** Rows of a frame as sorted strings — a multiset comparison key. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Whether the view's live delta dir holds an entry hard-linked from the
+    * previous version, i.e. carried across a fold's pointer flip. */
+  private def hasCarried(eng: KinesisEngine, view: String): Boolean = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    files(new java.io.File(eng.viewDeltaDir(view)))
+      .filter(_.getName.startsWith("part-"))
+      .exists(f => java.nio.file.Files.getAttribute(f.toPath, "unix:nlink")
+        .asInstanceOf[Int] > 1)
+  }
+
+  test("folds interleaved with appends: every view kind equals a batch recomputation") {
+    // a second thread folds while the stream keeps committing, so appends
+    // land in delta-v during the merge and must be carried across the
+    // flip; after each round every view must equal a batch recomputation
+    // over the stream table
+    val root = tmpDir("fi-root"); val meta = tmpDir("fi-meta")
+    val dir = s"$root/s"
+    val eng = new KinesisEngine(spark, meta, autoCompactEvery = 0)
+    eng.addEndpoint("ep", "r", url = root)
+    eng.createStream("fi_stream", StructType(Seq(
+      StructField("k", StringType), StructField("v", IntegerType))))
+    eng.createContinuousView("fi_keyed", "fi_stream",
+      _.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s")))
+    eng.createContinuousView("fi_global", "fi_stream",
+      _.agg(count(lit(1)).as("n"), sum("v").as("s")))
+    eng.createContinuousTransform("fi_tx", "fi_stream", _.select(col("k"), col("v")))
+    eng.createSlidingView("fi_sw", "fi_stream", keys = Seq("k"),
+      aggs = Seq("n" -> "count"), width = "1 HOUR", slide = "1 minute")
+    val rnd = new scala.util.Random(7)
+    var next = 0
+    def put(n: Int): Unit = {
+      ShardedLog.append(dir, 0, (1 to n).map { _ =>
+        next += 1; (s"p$next", s"k${rnd.nextInt(300)},${rnd.nextInt(100)}")
+      })
+    }
+    def check(step: String): Unit = {
+      val st = eng.streamTable("fi_stream")
+      assert(rowsOf(eng.viewTable("fi_keyed")) ===
+        rowsOf(st.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))), step)
+      assert(rowsOf(eng.viewTable("fi_global")) ===
+        rowsOf(st.agg(count(lit(1)).as("n"), sum("v").as("s"))), step)
+      assert(rowsOf(eng.viewTable("fi_tx")) === rowsOf(st.select("k", "v")), step)
+      assert(rowsOf(eng.viewTable("fi_sw")) ===
+        rowsOf(st.groupBy(window(col("arrival_timestamp"), "1 minute").as("__bucket"),
+          col("k")).agg(count(lit(1)).as("n"))), step)
+    }
+    val views = Seq("fi_keyed", "fi_global", "fi_tx", "fi_sw")
+    put(2000)
+    val id = eng.consumeBegin("ep", "s", "fi_stream", format = "csv",
+      delimiter = ",", batchsize = 100000)
+    eng.processAllAvailable()
+    check("initial load")
+    var carried = Set.empty[String]
+    var round = 0
+    // at least 4 rounds; more (up to 12) until some fold has carried
+    while (round < 4 || (carried.isEmpty && round < 12)) {
+      round += 1
+      @volatile var err: Throwable = null
+      val folder = new Thread(() =>
+        try views.foreach { v =>
+          if (v == "fi_sw") eng.expireSlidingViewTable(v) else eng.compactViewTable(v)
+        } catch { case t: Throwable => err = t })
+      folder.start()
+      while (folder.isAlive) { put(20); eng.processAllAvailable() }
+      folder.join()
+      assert(err == null, s"fold failed in round $round: $err")
+      carried ++= views.filter(hasCarried(eng, _))
+      check(s"after fold round $round")
+      put(20); eng.processAllAvailable()
+      check(s"after appends of round $round")
+    }
+    assert(carried.nonEmpty,
+      "some fold overlapped an append and carried it across the flip")
+    // a transform batch replayed after it was folded is skipped: drop the
+    // last commit (a crash between the delta write and the commit), fold,
+    // restart — the replay must not re-append the folded rows
+    eng.consumeEndAll()
+    val commits = java.nio.file.Paths.get(meta, "checkpoints", id.toString,
+      "fi_tx", "commits")
+    val last = new java.io.File(commits.toString).listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong).toPath
+    java.nio.file.Files.delete(last)
+    java.nio.file.Files.deleteIfExists(last.resolveSibling(s".${last.getFileName}.crc"))
+    eng.compactViewTable("fi_tx")
+    eng.consumeBegin("ep", "s", "fi_stream", format = "csv", delimiter = ",",
+      batchsize = 100000)
+    eng.processAllAvailable()
+    assert(eng.activeQueries.find(_.name == "fi_tx").get.lastProgress != null,
+      "the transform re-ran its uncommitted batch")
+    check("after a replay of a folded batch")
+    eng.consumeEndAll()
+  }
+
+  test("a failed background fold fails the view's next cadence trigger") {
+    val root = tmpDir("ff-root"); val meta = tmpDir("ff-meta")
+    val dir = s"$root/s"
+    val eng = new KinesisEngine(spark, meta, autoCompactEvery = 2)
+    eng.addEndpoint("ep", "r", url = root)
+    eng.createStream("ff_stream", StructType(Seq(StructField("payload", StringType))))
+    eng.createContinuousView("ff_view", "ff_stream", _.groupBy("payload").count())
+    ShardedLog.append(dir, 0, Seq(("k", "a")))
+    eng.consumeBegin("ep", "s", "ff_stream", format = "text")
+    eng.processAllAvailable()
+    // a committed-looking delta file that is not parquet: appends never
+    // read it, the fold's merge does
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(eng.viewDeltaDir("ff_view"), "part-99999-garbage.parquet"),
+      "not a parquet file")
+    def batch(): Long = {
+      ShardedLog.append(dir, 0, Seq(("k", "b")))
+      eng.processAllAvailable()
+      eng.activeQueries.find(_.name == "ff_view").get.lastProgress.batchId
+    }
+    assert(batch() === 1L)
+    assert(batch() === 2L, "the cadence trigger returns; its fold fails in the background")
+    assert(batch() === 3L, "an off-cadence trigger does not surface the failure")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](batch())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("part-99999-garbage")),
+      s"the query fails with the fold's exception: $e")
+    assert(eng.activeQueries.find(_.name == "ff_view").get.exception.isDefined)
+    eng.consumeEndAll()
+  }
+
+  test("a keyed fold merges with one exchange and runs no max(__batch) job") {
+    val root = tmpDir("fx-root"); val meta = tmpDir("fx-meta")
+    val eng = mkEngine(meta, root, "fx_stream", "fx_view")
+    ShardedLog.append(s"$root/s", 0, (1 to 500).map(i => (s"k$i", s"k${i % 50}")))
+    eng.consumeBegin("ep", "s", "fx_stream", format = "text")
+    eng.processAllAvailable()
+    ShardedLog.append(s"$root/s", 0, (1 to 100).map(i => (s"m$i", s"k${i % 70}")))
+    eng.processAllAvailable()
+    eng.consumeEndAll()
+    import org.apache.spark.scheduler._
+    case class Job(id: Int, stages: Seq[String])
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val inGroup = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffled = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val done = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == "graft-fold:fx_view") {
+          jobs.add(Job(e.jobId, e.stageInfos.map(_.name)))
+          e.stageIds.foreach(inGroup.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val s = e.stageInfo
+        if (s.taskMetrics != null && s.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffled.add(s.stageId)
+        done.add(s.stageId)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      eng.compactViewTable("fx_view")
+      val deadline = System.currentTimeMillis() + 20000
+      while (System.currentTimeMillis() < deadline &&
+             (jobs.isEmpty || !inGroup.stream().allMatch(done.contains(_))))
+        Thread.sleep(50)
+      Thread.sleep(200)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val group = jobs.asScala.toSeq
+    assert(group.nonEmpty, "the fold's jobs run under graft-fold:<view>")
+    // a standalone max(__batch) job would add executed stages of its own
+    assert(inGroup.asScala.count(done.contains) === 2,
+      s"the fold executes one map stage and the write, nothing else: $group")
+    assert(shuffled.asScala.count(inGroup.contains) === 1,
+      s"one exchange in the fold's merge: $group")
+    assert(rowsOf(eng.viewTable("fx_view")) ===
+      rowsOf(eng.streamTable("fx_stream").groupBy("payload").count()))
+  }
+
+  test("viewTable before the view's first commit is empty, in the view's schema") {
+    val root = tmpDir("vt0-root"); val meta = tmpDir("vt0-meta")
+    val eng = mkEngine(meta, root, "vt0_stream", "vt0_view")
+    new java.io.File(s"$root/s").mkdirs()
+    eng.consumeBegin("ep", "s", "vt0_stream", format = "text")
+    val empty = eng.viewTable("vt0_view")
+    assert(empty.collect().isEmpty)
+    assert(empty.columns.toSeq === Seq("payload", "count"))
+    ShardedLog.append(s"$root/s", 0, Seq(("a", "x")))
+    eng.processAllAvailable()
+    assert(eng.viewTable("vt0_view").collect().map(r => r.getString(0) -> r.getLong(1))
+      .toSeq === Seq("x" -> 1L))
+    eng.consumeEndAll()
+  }
+
   test("a view declared after consume_begin attaches without a consumer restart") {
     // PipelineDB CVs attach to live streams; here a repeated consume_begin
     // is additive — it starts only the missing queries, leaving running
