@@ -376,11 +376,9 @@ object PlanDump {
          |An eager cache+count materialization was tried first and the
          |bench band-guard flagged it at 3.4x the prior band (1,068 ms vs
          |253 ms for this shape at sf0.1 — cache job overhead dominates at
-         |local scale); graft.dedup.semantic.materialize=true enables the
-         |single-corpus-pass pinned-assignment plan for scales where
-         |corpus passes dominate. The BroadcastNestedLoopJoin in this
-         |plan is the whitelisted <=16-row codebook broadcast, same as the
-         |IVF queries.""").stripMargin,
+         |local scale), so the assignment stays a lazy plan. The
+         |BroadcastNestedLoopJoin in this plan is the whitelisted <=16-row
+         |codebook broadcast, same as the IVF queries.""").stripMargin,
     "q_similarity_pq" ->
       ("""Design (r14, encode reworked r15): product quantization + ADC
          |(Jegou et al. 2011), the billion-scale ANN memory layout.

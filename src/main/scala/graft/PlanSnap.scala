@@ -30,13 +30,6 @@ object PlanSnap {
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_R21=0 / GRAFT_R22=0 capture the pre-optimization plan shape
-    // (graft.Opt); GRAFT_SCALE_CLUSTER=1 captures the deployment-scale
-    // shape (graft.Opt.cluster)
-    sys.env.get("GRAFT_R21").foreach(v => spark.conf.set("graft.r21", v))
-    sys.env.get("GRAFT_R22").foreach(v => spark.conf.set("graft.r22", v))
-    sys.env.get("GRAFT_SCALE_CLUSTER")
-      .foreach(v => spark.conf.set("graft.scale.cluster", v))
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

@@ -114,22 +114,37 @@ object Prebuilt {
         // window first-class): no memo entry is stored on throw, so the
         // next call rebuilds — but the orphan primary would stay
         // registered in the catalog for the session. Drop whatever the
-        // failed build already registered before rethrowing
-        // (ADVICE r20 #4); the temp dir stays in the exit sweep.
-        // NonFatal only (ADVICE r21 #3): a fatal error (OOM, interrupt)
-        // must propagate immediately — issuing catalog RPCs on the way
-        // out could mask or compound the original condition
+        // failed build already registered before rethrowing; the temp
+        // dir stays in the exit sweep. NonFatal only: a fatal error
+        // (OOM, interrupt) must propagate immediately — issuing catalog
+        // RPCs on the way out could mask or compound the original
+        // condition
         try build(dir.toString, name)
         catch {
           case scala.util.control.NonFatal(e) =>
-            (name +: extraSuffixes.map(name + _)).foreach { t =>
-              try { if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`") }
-              catch { case scala.util.control.NonFatal(_) => () }
+            dropAfterFailedBuild(name +: extraSuffixes.map(name + _), e) { t =>
+              if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`")
             }
-            throw e
         }
         name
       }
     })
+  }
+
+  /** Run `drop` on each table a failed build may have registered, then
+    * rethrow the build's exception `cause`. A non-fatal cleanup failure
+    * is swallowed; a fatal one (OOM, interrupt) stops the cleanup and
+    * propagates at once, carrying `cause` as suppressed so the build
+    * failure is never lost. */
+  private[graft] def dropAfterFailedBuild(tables: Seq[String], cause: Throwable)
+                                         (drop: String => Unit): Nothing = {
+    tables.foreach { t =>
+      try drop(t)
+      catch {
+        case scala.util.control.NonFatal(_) => ()
+        case fatal: Throwable => fatal.addSuppressed(cause); throw fatal
+      }
+    }
+    throw cause
   }
 }

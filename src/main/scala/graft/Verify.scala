@@ -21,15 +21,6 @@ object Verify {
     // flag is up, so a stray conf can never silently desync the gate —
     // the run fails loudly instead of hash-mismatching.
     spark.conf.set("graft.gate", "true")
-    // A/B and deployment-shape verification (r22): the same env hooks as
-    // PlanSnap, so the oracle gate can run against the off-shapes
-    // (GRAFT_R21=0 / GRAFT_R22=0) and the cluster shapes
-    // (GRAFT_SCALE_CLUSTER=1) — "oracle green both ways" is the
-    // adjudication bar for every shape switch. Unset = driver defaults.
-    Seq("GRAFT_R21" -> "graft.r21", "GRAFT_R22" -> "graft.r22",
-        "GRAFT_SCALE_CLUSTER" -> "graft.scale.cluster").foreach {
-      case (env, key) => sys.env.get(env).foreach(spark.conf.set(key, _))
-    }
     new java.io.File(outDir).mkdirs()
     // comma-separated allowlist for single-query dumps (local iteration);
     // unset = all, which is what the driver runs

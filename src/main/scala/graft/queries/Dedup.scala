@@ -157,11 +157,11 @@ object Dedup {
     * `_indexed` serve twin passes [[prebuiltBands]] (r18). */
   private def minhashPairs(s: SparkSession, d: String,
                            bands0: DataFrame = null): DataFrame = {
-    // r21 adjudicated NOT cached: the self-join's broadcast build side
-    // duplicates the shingle+minhash projection, but caching the band
-    // frame to dedup it measured 1.25× SLOWER (ABBench, alternating
-    // min-of-6) — the materialization job + memory round-trip costs more
-    // than the second pipelined projection pass. The bucketed twin is
+    // NOT cached: the self-join's broadcast build side duplicates the
+    // shingle+minhash projection, but caching the band frame to dedup
+    // it measured 1.25× SLOWER (alternating min-of-6 runs) — the
+    // materialization job + memory round-trip costs more than the
+    // second pipelined projection pass. The bucketed twin is
     // the shape that removes the recompute at scale.
     val bands = Option(bands0).getOrElse(bandify(sigDf(s, d)))
     val x = bands.as("x"); val y = bands.as("y")
@@ -196,29 +196,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     val e0 = e1.union(e1.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
-    // r22 (VERDICT r21 #6): the at-scale propagation shape, reachable by
-    // graft.scale.cluster=1 (default OFF — both pieces were ABBench-
-    // adjudicated SLOWER at sf0.1 in r21: edge pre-partitioning +15–38%,
-    // 2-hop +28%, where rounds are planner/action-bound, not data-bound).
-    // At 100 TB each round is a full corpus pass, so (a) 2-HOP CLOSURE
-    // (edges ∪ edges²) halves the round count — same fixpoint: 2-hop
-    // edges connect already-connected nodes, self-loops filtered, node
-    // set unchanged because every node of e carries both edge
-    // directions; and (b) the edge side is REPARTITIONED by dst and
-    // CACHED — an InMemoryTableScan preserves outputPartitioning where
-    // a localCheckpoint RDD scan reports UnknownPartitioning, so every
-    // round's src/dst join reads the layout with NO per-round edge
-    // exchange (guide §2.4 share-one-exchange; production swaps the
-    // cache for a dst-bucketed table — same planner contract).
-    val edges = if (graft.Opt.cluster(s)) {
-      val e = e0.localCheckpoint(false)
-      e.as("l").join(e.as("r"), col("l.dst") === col("r.src"))
-        .select(col("l.src").as("src"), col("r.dst").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .union(e).distinct()
-        .repartition(col("dst"))
-        .cache()
-    } else e0.localCheckpoint(false)
+    // edges truncated once — every round joins against them
+    val edges = e0.localCheckpoint(false)
     var labels = edges.select(col("src").as("d")).distinct()
       .withColumn("lbl", col("d")).localCheckpoint(false)
     // labels only ever decrease, so an unchanged label SUM is the
@@ -226,18 +205,15 @@ object Dedup {
     // (decimal: a Σ of 64-bit ids over billions of nodes overflows long)
     def lblSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-    // r21: the INITIAL label sum is folded into round 1's action — the
-    // node set is invariant under propagation and lbl₀ = d, so Σ lbl of
-    // the initial frame equals Σ d of ANY round's output; reading both
-    // sums off round 1 (one extra agg column in the same pass) deletes a
-    // whole driver action + job cycle per query, the dominant per-round
-    // cost at small SF. Empty graph: round 1 aggregates to (null, null)
-    // and converges immediately — the prevSum==null contract, unchanged.
-    val fold = graft.Opt.on(s)
-    var prevSum: java.math.BigDecimal = if (fold) null else lblSum(labels)
-    var havePrev = !fold
+    // the INITIAL label sum is read off round 1's action: the node set
+    // is invariant under propagation and lbl₀ = d, so Σ lbl of the
+    // initial frame equals Σ d of ANY round's output — one extra agg
+    // column in round 1 instead of a whole driver action + job, the
+    // dominant per-round cost at small SF. Empty graph: round 1
+    // aggregates to (null, null) and converges immediately.
+    var prevSum: java.math.BigDecimal = null
     var iter = 0
-    var converged = !fold && prevSum == null // empty graph (unfolded path)
+    var converged = false
     while (!converged && iter < 50) {
       val next = edges.join(labels, col("dst") === col("d"))
         .select(col("src").as("d"), col("lbl"))
@@ -245,11 +221,10 @@ object Dedup {
         .groupBy("d").agg(min("lbl").as("lbl"))
         .localCheckpoint(false)
       val s2 =
-        if (!havePrev) {
+        if (iter == 0) {
           val row = next.agg(sum(col("lbl").cast("decimal(38,0)")),
                              sum(col("d").cast("decimal(38,0)"))).head()
           prevSum = row.getDecimal(1) // Σ d == the initial Σ lbl
-          havePrev = true
           row.getDecimal(0)
         } else lblSum(next)
       converged = s2 == null || s2.compareTo(prevSum) == 0
@@ -586,83 +561,37 @@ object Dedup {
       .getOrElse(spanKeys(wideDocs(s, d), "doc_id", "text", 8)
         .select(col("doc_id"), col("wh")).distinct())
       .join(sp, "doc_id")
-    if (graft.Opt.on(s) && graft.Opt.on22(s)) {
-      // r22 (VERDICT r21 #1 — adjudicating the r21 snapshot-commit
-      // window form): single spans pass AND skew safety. The r21 window
-      // (`max(flag) over Window.partitionBy(wh)`, kept under r22=0 for
-      // A/B) computed the per-wh train flag with NO partial aggregation
-      // and NO AQE skew splitting — one boilerplate span shared by
-      // millions of docs lands every row in one sort task at 100 TB,
-      // exactly the hot-key class the df/occupancy cutoffs exist for.
-      // Here the single corpus pass survives via a lazy localCheckpoint
-      // of the spans frame (the corpus-wide graft_spanhashes Generate +
-      // split join run ONCE — the r21 two-arm shape ran them twice with
-      // no exchange reuse, plan-audited), and the flag side returns to
-      // the guide-§2.3 shape: filter(train) pushes below a map-side
-      // partial-aggregated distinct, so the wh exchange carries one row
-      // per distinct (map-partition, train wh) instead of every span
-      // row. The join back to the test rows is a plain equi-join — the
-      // construct AQE skew handling CAN split (guide §2.5: joins yes,
-      // windows no). ABBench vs the window form (graft.r22) and the
-      // two-arm form (graft.r21): see OPTIMIZATION_r22.md ratio table.
-      // The checkpoint applies ONLY to the in-query twins (docWh0 null):
-      // there the duplicated subtree is the corpus-wide graft_spanhashes
-      // Generate + split join, exactly what materializing once removes.
-      // The serve twins' spans frame is a prebuilt/bucketed table join —
-      // re-reading a pruned columnar table twice is cheaper than
-      // spooling the joined frame to executor-local disk, and the
-      // checkpoint would hide the bucketed label/docwh scans from the
-      // physical plan (PlanAuditSpec's zero-exchange-above-bucketed-scan
-      // tripwire walks the tree; an RDD scan node is opaque).
-      val sp1 = if (docWh0 == null) spans.localCheckpoint(false) else spans
-      val trainWh = sp1.filter(col("split") === "train")
-        .select(col("wh")).distinct()
-      sp1.filter(col("split") === "test")
-        .join(trainWh.withColumn("hit", lit(1)), Seq("wh"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_wh"), count(col("hit")).as("n_shared"))
-        .filter(col("n_shared") > 0)
-        .select(col("doc_id"), col("n_wh"), col("n_shared"),
-          graft.Q.r4(col("n_shared").cast("double") / col("n_wh"))
-            .as("shared_frac"))
-        .orderBy("doc_id")
-    } else if (graft.Opt.on(s)) {
-      // r21 single-pass form (r22=0 A/B arm): the two-arm shape below
-      // duplicates the ENTIRE spans subtree — the corpus-wide
-      // graft_spanhashes Generate and the split join run once under the
-      // trainWh distinct and again on the test side, with NO exchange
-      // reuse (the split filters push below the exchanges, so the
-      // subtrees differ — plan-audited). Computing the per-wh train
-      // flag as a window over ONE spans pass halves the corpus work:
-      // hit = "any train doc carries this wh", exactly trainWh
-      // membership, so n_shared = Σ hit over a test doc's rows equals
-      // the left-join count. SKEW HAZARD at 100 TB (VERDICT r21 #1):
-      // the window has no partial aggregation and no AQE splitting —
-      // superseded by the r22 checkpoint+join form above.
-      val hit = max(when(col("split") === "train", 1L).otherwise(0L))
-        .over(Window.partitionBy("wh"))
-      spans.withColumn("hit", hit)
-        .filter(col("split") === "test")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_wh"), sum(col("hit")).as("n_shared"))
-        .filter(col("n_shared") > 0)
-        .select(col("doc_id"), col("n_wh"), col("n_shared"),
-          graft.Q.r4(col("n_shared").cast("double") / col("n_wh"))
-            .as("shared_frac"))
-        .orderBy("doc_id")
-    } else {
-      val trainWh = spans.filter(col("split") === "train")
-        .select(col("wh")).distinct()
-      spans.filter(col("split") === "test")
-        .join(trainWh.withColumn("hit", lit(1)), Seq("wh"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_wh"), count(col("hit")).as("n_shared"))
-        .filter(col("n_shared") > 0)
-        .select(col("doc_id"), col("n_wh"), col("n_shared"),
-          graft.Q.r4(col("n_shared").cast("double") / col("n_wh"))
-            .as("shared_frac"))
-        .orderBy("doc_id")
-    }
+    // Single spans pass AND skew safety. The corpus-wide
+    // graft_spanhashes Generate + split join would otherwise run twice —
+    // once under the trainWh distinct and again on the test side, with
+    // no exchange reuse (the split filters push below the exchanges, so
+    // the subtrees differ) — so the spans frame is lazily
+    // localCheckpointed. The flag side is the guide-§2.3 shape:
+    // filter(train) pushes below a map-side partial-aggregated
+    // distinct, so the wh exchange carries one row per distinct
+    // (map-partition, train wh) instead of every span row, and the join
+    // back to the test rows is a plain equi-join — the construct AQE
+    // skew handling CAN split (guide §2.5: joins yes, windows no), so
+    // one boilerplate span shared by millions of docs never lands in
+    // one task. The checkpoint applies ONLY to the in-query twins
+    // (docWh0 null). The serve twins' spans frame is a prebuilt/bucketed
+    // table join — re-reading a pruned columnar table twice is cheaper
+    // than spooling the joined frame to executor-local disk, and the
+    // checkpoint would hide the bucketed label/docwh scans from the
+    // physical plan (PlanAuditSpec's zero-exchange-above-bucketed-scan
+    // tripwire walks the tree; an RDD scan node is opaque).
+    val sp1 = if (docWh0 == null) spans.localCheckpoint(false) else spans
+    val trainWh = sp1.filter(col("split") === "train")
+      .select(col("wh")).distinct()
+    sp1.filter(col("split") === "test")
+      .join(trainWh.withColumn("hit", lit(1)), Seq("wh"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_wh"), count(col("hit")).as("n_shared"))
+      .filter(col("n_shared") > 0)
+      .select(col("doc_id"), col("n_wh"), col("n_shared"),
+        graft.Q.r4(col("n_shared").cast("double") / col("n_wh"))
+          .as("shared_frac"))
+      .orderBy("doc_id")
   }
 
   val queries: Map[String, Qf] = Map(
@@ -1040,26 +969,13 @@ object Dedup {
       // docs shares ≥ 67 shingles, so requiring ≥ 5 shared *rare* shingles
       // loses nothing while cutting candidates ~1000× (measured 1.12M → ~1k
       // at sf0.1; the rescore was 99.98% false positives without it).
-      // r22 adjudication (VERDICT r21 #4): the self-join evaluates the
-      // rare-shingle df AGGREGATION once per arm — the corpus-wide
-      // explode + hashpartitioning(sh) exchange + final agg run twice
-      // with no static exchange reuse (plan-audited), plus a broadcast
-      // build per arm. TWO single-pass rewrites were ABBench-adjudicated
-      // SLOWER at sf0.1 and reverted as local defaults (ratio tables in
-      // OPTIMIZATION_r22.md): (a) in-row pair expansion — collect_list
-      // per rare shingle (bounded ≤ 20 by the df cutoff, skew-free by
-      // construction) + two Generates, deleting the self-join and both
-      // broadcasts entirely: 1.32–1.35×; (b) caching the filtered rare
-      // set so the df agg runs once: 1.26–1.36×. Everything here reads
-      // the in-memory docSets cache locally, so duplicated passes are
-      // nearly free while any materialization is a blocking job — the
-      // same economics that reverted r21's cheap-projection caches. At
-      // 100 TB the duplicated corpus aggregation IS the cost, so
-      // graft.scale.cluster=1 takes shape (b): one df aggregation,
-      // both arms broadcast from the materialized rare set.
-      val rareKeys0 = rare.select("sh")
-      val rareKeys =
-        if (graft.Opt.cluster(s)) rareKeys0.cache() else rareKeys0
+      // The rare set stays lazy: the self-join evaluates its df
+      // aggregation once per arm, but both arms read the in-memory
+      // docSets cache, so the duplicated pass is nearly free while
+      // materializing the rare set (1.26–1.36×) or expanding pairs
+      // in-row per shingle (1.32–1.35×) adds a blocking job — both
+      // measured slower at sf0.1.
+      val rareKeys = rare.select("sh")
       val rareSh = sh.join(rareKeys, "sh")
       val x = rareSh.as("x"); val y = rareSh.as("y")
       val pairs = x.join(y, col("x.sh") === col("y.sh") &&
@@ -1155,42 +1071,17 @@ object Dedup {
       // of the round(cos,6)/cent_id-tie-break determinism contract across
       // the ANN and dedup families), keeping the winning cosine: SemDeDup
       // ranks keep/drop by distance-to-centroid
-      val assignedPlan = Similarity
+      val assigned = Similarity
         .ivfAssignment(emb, cents, keepCos = true)
         .select(col("vec_id"), col("embedding"), col("cluster"), col("cos_cent"))
-      // r15 (judge item 2): r14's shape fed `assigned` into THREE plan
-      // arms — both sides of the pair self-join plus a final marker
-      // join — so the corpus scan + max_by assignment ran three times.
-      // Restructured per the verdict's alternative: drop-marking happens
-      // INSIDE the pair-join aggregation. One left-outer self-join on
-      // the cluster key, then per-a-vec aggregation: any surviving
-      // b-match means "dropped". The marker join is GONE; the assignment
-      // subtree appears only in the self-join's two arms (irreducible
-      // for a self-join without materializing). Measured at sf0.1:
-      // 253 ms vs 255 ms for the 3-arm shape vs 1,068 ms for eager
-      // cache+count — this round's bench band-guard flagged that cache
-      // attempt at 3.4x its prior band, exactly the regression class it
-      // exists to catch. At 100 TB set
-      // graft.dedup.semantic.materialize=true to pin the assignment
-      // (ONE corpus pass + in-memory reads; production would checkpoint
-      // the assignment table to storage — same shape, and the cache
-      // build cost amortizes where corpus passes dominate job overhead).
-      // Harnesses clearCache() after each query.
-      // r22: graft.scale.cluster=1 is the "at 100 TB" materialization
-      // path made reachable by one deployment conf (VERDICT r21 #4/#5):
-      // map-only assignment (no per-pass corpus exchange) checkpointed
-      // once, feeding both self-join arms — strictly the shape the r15
-      // comment above prescribes for scale. Locally the lazy two-arm
-      // plan stays (measured 253 ms vs 1,068 ms eager cache at sf0.1).
-      val assigned =
-        if (graft.Opt.cluster(s))
-          Similarity.ivfAssignment(emb, cents, keepCos = true, mapOnly = true)
-            .select(col("vec_id"), col("embedding"), col("cluster"),
-                    col("cos_cent"))
-            .localCheckpoint(false)
-        else if (s.conf.getOption("graft.dedup.semantic.materialize")
-              .exists(_.toBoolean)) assignedPlan.cache()
-        else assignedPlan
+      // Drop-marking happens INSIDE the pair-join aggregation: one
+      // left-outer self-join on the cluster key, then per-a-vec
+      // aggregation — any surviving b-match means "dropped" — so the
+      // assignment subtree appears only in the self-join's two arms
+      // (irreducible for a self-join without materializing). The plan
+      // stays lazy: at sf0.1 it measured 253 ms against 1,068 ms for an
+      // eager cache+count of the assignment, whose job overhead
+      // dominates at this scale.
       val a = assigned.as("a"); val b = assigned.as("b")
       a.join(b,
           col("a.cluster") === col("b.cluster") &&

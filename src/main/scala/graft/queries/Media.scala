@@ -222,8 +222,8 @@ object Media {
     * re-join), hot buckets above `cutoff` occupancy skipped for
     * candidate generation. The information floor (n_px / n_samp) is the
     * caller's, applied BEFORE this join so both sides agree. */
-  private def hammingBandPairs(hashed0: DataFrame, cutoff: Int): DataFrame = {
-    // r21: the signature frame is CACHED — it feeds the occupancy
+  private def hammingBandPairs(hashed: DataFrame, cutoff: Int): DataFrame = {
+    // the signature frame is CACHED — it feeds the occupancy
     // aggregate AND both sides of the band self-join, and each copy of
     // the subtree re-runs the synthetic-media generate + byte decode +
     // fingerprint mapPartitions pipeline (the heavy per-row work of the
@@ -233,8 +233,7 @@ object Media {
     // materialization (see minhashPairs) — decode is the dominant cost
     // here and runs once under the cache. In-query only; harnesses
     // clearCache() per query.
-    val hashed = if (graft.Opt.on) hashed0.cache() else hashed0
-    val e0 = hashed.select(
+    val e0 = hashed.cache().select(
       Seq(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3")) :+
         posexplode(array((0 until 4).map(i => col(s"b$i")): _*))
           .as(Seq("band", "bv")): _*)

@@ -83,6 +83,10 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[KinesisEngine])
 
+  // files per view delta write and per fold output: one sizing for both
+  // ends of the delta log, so a trigger's delta reads like a fold's
+  private val ViewDeltaFiles = 8
+
   case class Endpoint(name: String, region: String, credfile: String, url: String)
   case class Consumer(id: Int, endpoint: String, stream: String, relation: String,
                       format: String, delimiter: String, quote: String, escape: String,
@@ -102,8 +106,6 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   // memory-materialized views: the current cached snapshot per view, kept
   // so the previous generation can be unpersisted after each swap
   private val memSnaps = mutable.Map[String, DataFrame]()
-  // views already warned about a malformed graft.view.delta.files value
-  private val deltaFilesWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private var nextId = 1
 
   Files.createDirectories(Paths.get(metaDir))
@@ -522,7 +524,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * keys)), never O(stream history), on a query that runs forever.
     * The same online fold as [[compactViewTable]], with the live-bucket
     * filter applied to the merged rows. */
-  def expireSlidingViewTable(name: String, targetPartitions: Int = 8): Unit = {
+  def expireSlidingViewTable(name: String,
+                             targetPartitions: Int = ViewDeltaFiles): Unit = {
     val width = readSwMeta(name).width
     foldView(name, targetPartitions,
       _.filter(col("__bucket.end") > current_timestamp() - expr(s"INTERVAL $width")))
@@ -837,13 +840,12 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     keysOpt match {
       case None => if (keepBatch) delta else delta.drop("__batch")
       case Some(keys)
-          if keys.nonEmpty && delta.columns.length > keys.length + 1 &&
-            graft.Opt.on(spark) =>
-        // r21: newest-per-key via max_by aggregation instead of a
-        // row_number window. The win is PARTIAL (map-side) aggregation:
-        // same-key delta rows collapse before the exchange, so the
-        // shuffle carries ~one row per key instead of one per delta —
-        // the deeper the log since compaction, the bigger the cut.
+          if keys.nonEmpty && delta.columns.length > keys.length + 1 =>
+        // newest-per-key via max_by aggregation, not a row_number window.
+        // The win is PARTIAL (map-side) aggregation: same-key delta rows
+        // collapse before the exchange, so the shuffle carries ~one row
+        // per key instead of one per delta — the deeper the log since
+        // compaction, the bigger the cut.
         // (Physically this is a SortAggregate — the struct buffer is not
         // hash-aggregable — so it trades the window's single post-shuffle
         // sort for map+reduce sorts over FEWER rows; isolated merge on a
@@ -935,7 +937,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * the fold's carry-and-flip step, and readers keep the one-version
     * grace window. The engine runs this same routine on the cadence, on
     * its fold thread; a direct call runs it on the caller's thread. */
-  def compactViewTable(name: String, targetPartitions: Int = 8): Unit =
+  def compactViewTable(name: String, targetPartitions: Int = ViewDeltaFiles): Unit =
     foldView(name, targetPartitions, identity)
 
   /** The one fold routine behind [[compactViewTable]] and
@@ -1567,37 +1569,20 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
               .outputMode(if (keysOpt.isDefined) "update" else "append")
               .foreachBatch { (batch: DataFrame, batchId: Long) =>
                 val stamped = (gen << 40) | batchId
-                // r21 (guide §6 small files): an update-mode batch keeps
-                // the state-store partitioning (spark.sql.shuffle.
-                // partitions), so a touched-groups-sized delta would land
-                // as cores× sliver files PER TRIGGER and the merge read
-                // pays a footer+task per sliver until compaction. Pack
-                // the write into at most graft.view.delta.files tasks
-                // (default 8 — compactViewTable's targetPartitions);
-                // coalesce is narrow, so state partitions keep their ids
-                // and no shuffle is added. Raise the knob when a single
-                // trigger legitimately touches huge group counts.
-                // r22 (ADVICE r21 #1): computed lazily so append-mode
-                // views (keysOpt None, `packed` never used) don't force
-                // physical planning of the micro-batch via rdd access on
-                // every trigger; the knob parse is clamped/safe so a
-                // malformed session value degrades to the default
-                // instead of failing the stream mid-trigger — with one
-                // warning per view, so the fallback is visible.
-                lazy val packed = {
-                  val raw = spark.conf.get("graft.view.delta.files", "8")
-                  val deltaFiles = raw.trim.toIntOption.map(math.max(1, _))
-                    .getOrElse {
-                      if (deltaFilesWarned.add(vname))
-                        log.warn(s"view '$vname': graft.view.delta.files = " +
-                          s"'$raw' is not an integer; packing deltas into 8 files")
-                      8
-                    }
-                  if (graft.Opt.on(spark) &&
-                      batch.rdd.getNumPartitions > deltaFiles)
-                    batch.coalesce(deltaFiles)
+                // small files (guide §6): an update-mode batch keeps the
+                // state-store partitioning (spark.sql.shuffle.partitions),
+                // so a touched-groups-sized delta would land as cores×
+                // sliver files PER TRIGGER and the merge read pays a
+                // footer+task per sliver until compaction. Pack the write
+                // into at most ViewDeltaFiles tasks; coalesce is narrow,
+                // so state partitions keep their ids and no shuffle is
+                // added. Lazy so append-mode views (keysOpt None, `packed`
+                // never used) don't force physical planning of the
+                // micro-batch via rdd access on every trigger.
+                lazy val packed =
+                  if (batch.rdd.getNumPartitions > ViewDeltaFiles)
+                    batch.coalesce(ViewDeltaFiles)
                   else batch
-                }
                 viewLock(vname).synchronized {
                   if (keysOpt.isDefined)
                     packed.withColumn("__batch", lit(stamped))

@@ -528,4 +528,24 @@ class DedupEdgeSpec extends SparkSpec {
       "dropping the primary still rebuilds (pre-existing self-heal)")
     assert(spark.catalog.tableExists(n3 + "_extra"))
   }
+
+  test("Prebuilt build cleanup: a fatal DROP error carries the build failure as suppressed") {
+    val buildErr = new IllegalStateException("build failed")
+    val dropped = scala.collection.mutable.ArrayBuffer[String]()
+    val thrown = intercept[InterruptedException] {
+      graft.Prebuilt.dropAfterFailedBuild(Seq("t", "t_extra"), buildErr) { t =>
+        dropped += t
+        throw new InterruptedException(s"interrupted dropping $t")
+      }
+    }
+    assert(dropped.toSeq === Seq("t"), "a fatal error stops the cleanup at once")
+    assert(thrown.getSuppressed.toSeq === Seq(buildErr),
+      "the original build exception must ride along as suppressed")
+    // a non-fatal cleanup failure is swallowed and the build error rethrown
+    val rethrown = intercept[IllegalStateException] {
+      graft.Prebuilt.dropAfterFailedBuild(Seq("t"), buildErr)(_ =>
+        throw new RuntimeException("drop failed"))
+    }
+    assert(rethrown eq buildErr)
+  }
 }

@@ -68,13 +68,12 @@ class EngineScaleSpec extends SparkSpec {
     eng.consumeEndAll()
   }
 
-  test("view merge read: max_by aggregate path equals the window path, and plans without a window") {
-    // r21 optimization: the newest-per-key delta merge is a max_by
-    // aggregate (partial map-side agg collapses same-key delta rows
-    // before the exchange) instead of a row_number window. Equivalence
-    // is the contract: same rows under graft.r21=1 (aggregate) and =0
-    // (window), and the optimized logical plan must carry an Aggregate
-    // and no Window node.
+  test("view merge read: max_by aggregate equals a batch recomputation, and plans without a window") {
+    // the newest-per-key delta merge is a max_by aggregate (partial
+    // map-side agg collapses same-key delta rows before the exchange),
+    // not a row_number window: its rows must equal an independent batch
+    // groupBy over the stream table, and the optimized logical plan must
+    // carry an Aggregate and no Window node.
     val root = tmpDir("mm-root"); val meta = tmpDir("mm-meta")
     val eng = mkEngine(meta, root, "mm_stream", "mm_view")
     ShardedLog.append(s"$root/s", 0, Seq(("a", "a"), ("b", "b"), ("a", "a")))
@@ -84,20 +83,13 @@ class EngineScaleSpec extends SparkSpec {
     ShardedLog.append(s"$root/s", 0, Seq(("a", "a"), ("c", "c")))
     eng.processAllAvailable()
     eng.consumeEndAll()
-    def rows() = eng.viewTable("mm_view").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // try/finally (ADVICE r21 #2): a mid-test failure must not leak
-    // graft.r21=0 into the shared session and silently flip later tests
-    // onto unoptimized paths
-    val (agg, plan, win) = try {
-      spark.conf.set("graft.r21", "1")
-      val agg = rows()
-      val plan = eng.viewTable("mm_view").queryExecution.optimizedPlan.toString
-      spark.conf.set("graft.r21", "0")
-      (agg, plan, rows())
-    } finally spark.conf.unset("graft.r21")
-    assert(agg === Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
-    assert(win === agg, "window-path and aggregate-path merges must agree")
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val merged = counts(eng.viewTable("mm_view"))
+    val batch = counts(eng.streamTable("mm_stream").groupBy("payload").count())
+    assert(merged === Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
+    assert(merged === batch, "the merged view must equal a batch groupBy over the log")
+    val plan = eng.viewTable("mm_view").queryExecution.optimizedPlan.toString
     assert(plan.contains("Aggregate") && !plan.contains("Window"),
       s"optimized merge must be an aggregate, not a window:\n$plan")
   }
