@@ -7,8 +7,9 @@ import scala.util.chaining._
 
 import graft.sources.ShardedLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EvalMode, ExprId, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Generate, LeafNode, LogicalPlan, Project, SubqueryAlias, Union, View => ViewNode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,12 +29,26 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   *    identical rows, timestamps included.
   *  - `createContinuousView` — a standing aggregation over a stream
   *    (PipelineDB CV, reference README.md:66). Default materialization is
-  *    INCREMENTAL: the view runs in update mode and each micro-batch
-  *    appends only the changed groups as a parquet delta; [[viewTable]]
-  *    merges deltas at read time (last write per group key wins) and the
-  *    engine folds the log ONLINE every `autoCompactEvery` batches
+  *    INCREMENTAL, on one of two write paths chosen from the view's
+  *    analyzed plan and catalog state (no option selects it):
+  *     - COMBINER — PipelineDB's combinable transition states. When the
+  *       plan's root is an Aggregate (only renaming projections above it)
+  *       over a stateless, unwatermarked input and every column is a
+  *       grouping key or a plain count/sum/min/max under an alias (and
+  *       the view feeds no output stream), the query keeps no state
+  *       store: each micro-batch's aggregate is written as per-key
+  *       partials into its own `b<stamp>` dir, and [[viewTable]] and the
+  *       fold combine partials per key (sum for count and sum, min, max);
+  *     - STATE PATH — every other aggregate (avg, HLL sketches, HAVING,
+  *       watermarks, sliding/session windows, output streams, custom
+  *       state behind `keys=`) runs in update mode, each micro-batch
+  *       appends the changed groups' running values as a parquet delta,
+  *       and [[viewTable]] keeps the last write per group key.
+  *    The engine folds the log ONLINE every `autoCompactEvery` batches
   *    (versioned dirs + atomic pointer — no consumer stop; see
-  *    [[compactViewTable]]). The fold runs OFF the trigger path: the
+  *    [[compactViewTable]]); a log of `b<stamp>` dirs folds sooner, once
+  *    they reach Spark's parallel-listing threshold, so no read lists
+  *    them with a Spark job. The fold runs OFF the trigger path: the
   *    cadence trigger hands it to one engine-owned background thread and
   *    returns, and the view's appends wait only for the fold's short
   *    carry-and-flip step, never for its merge. Per-trigger sink cost is
@@ -70,13 +85,23 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   *
   * Delivery: the reference commits seqnums in a second transaction after
   * COPY (at-least-once, with poison batches dropped —
-  * pipeline_kinesis.c:738-758). Here source replay + checkpointed state
-  * give exactly-once view updates; parse failures are PERMISSIVE (nulls),
-  * not batch drops. A retried micro-batch of a MERGE view appends a
-  * byte-identical delta (same offsets → same aggregate rows), which the
-  * read-time merge collapses; a retried batch of a STATELESS TRANSFORM
-  * overwrites its own per-batch delta dir (or is skipped if already
-  * folded by compaction) — both view kinds read idempotent under replay.
+  * pipeline_kinesis.c:738-758). Here a replayable source plus an
+  * idempotent view sink give exactly-once view updates; parse failures
+  * are PERMISSIVE (nulls), not batch drops. A retried micro-batch of a
+  * STATE-PATH view appends a byte-identical delta (same offsets → same
+  * aggregate rows), which the read-time merge collapses; a retried batch
+  * of a COMBINER view or a STATELESS TRANSFORM overwrites its own
+  * per-batch delta dir (or is skipped if already folded by compaction) —
+  * every view kind reads idempotent under replay.
+  *
+  * Fresh lineage: a consumer lineage with no offsets in its checkpoint (a
+  * removed and re-created consumer, or a view attached later) replays the
+  * log from its start position. A combiner view therefore restarts empty
+  * first — a consumer re-created with `startSeq = -1` (latest) then counts
+  * only the records put after it; a state-path view's new lineage
+  * recomputes its groups and outranks the old rows by generation. A view
+  * whose checkpoint holds offsets resumes on the write path that wrote
+  * them.
   */
 class KinesisEngine(spark: SparkSession, metaDir: String,
                     autoCompactEvery: Int = 64) {
@@ -368,7 +393,19 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     *        when the view uses custom stateful operators the inference
     *        can't see (e.g. flatMapGroupsWithState in update mode).
     *        Ignored for materialize="append" (no merge — finalized rows
-    *        only).
+    *        only). Keys that differ from a combinable plan's grouping keys
+    *        keep the view on the state path.
+    *
+    * Write path (chosen at consumeBegin from the analyzed plan, logged
+    * once per view): a combinable aggregate — root Aggregate whose every
+    * column is a grouping key or a non-distinct, unfiltered count, sum,
+    * min or max directly under an alias, over an input with no watermark
+    * or stateful operator — takes the COMBINER path when
+    * materialize="parquet" and the view feeds no output stream: no state
+    * store, per-batch partials combined at fold and read. Everything else
+    * takes the STATE path (see the class doc). Under combine a fresh
+    * consumer lineage restarts the view empty (the class doc's
+    * fresh-lineage rule).
     *
     * A closure view does NOT persist across engine restarts (a Scala
     * lambda has no durable representation); use
@@ -409,11 +446,20 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
           "(count | sum:col | min:col | max:col | avg:col | count_distinct:col)")
     }
 
+  /** Combine a column of count/sum/min/max partials: counts and sums
+    * add, min and max keep the extreme. Shared by sliding-view buckets and
+    * combiner-view batches. */
+  private def combinePartials(op: String, c: String): org.apache.spark.sql.Column =
+    op match {
+      case "count" | "sum" => sum(col(c))
+      case "min" => min(col(c))
+      case "max" => max(col(c))
+    }
+
   private def swCombineExpr(spec: (String, String)): org.apache.spark.sql.Column =
     spec._2.split(":", 2)(0) match {
-      case "count" | "sum" => sum(col(spec._1)).as(spec._1)
-      case "min" => min(col(spec._1)).as(spec._1)
-      case "max" => max(col(spec._1)).as(spec._1)
+      case op @ ("count" | "sum" | "min" | "max") =>
+        combinePartials(op, spec._1).as(spec._1)
       // null on an all-null/empty window, exactly like batch avg
       case "avg" => (sum(col(s"__${spec._1}_sum")) /
                      sum(col(s"__${spec._1}_cnt"))).as(spec._1)
@@ -618,8 +664,9 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                                 materialize: String = "parquet"): Unit =
     createContinuousView(name, relation, transform, materialize)
 
-  /** Per-batch SQL application for SQL-declared views. The stream batch is
-    * registered under the relation's name only for the duration of the
+  /** Per-batch SQL application for SQL-declared views. The stream (or, on
+    * the combiner path, each micro-batch) is registered in its own
+    * session under the relation's name only for the duration of the
     * analysis — a pre-existing user temp view with that name is shadowed
     * and restored, never clobbered (same contract as the `sql()` query
     * path below; `spark.sql` analyzes eagerly, so the returned frame keeps
@@ -671,22 +718,27 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
             "stream's parse step instead")
       cg
     }
+    // The frame's own session: the streaming frame's at consumeBegin, the
+    // stream's cloned session for a combiner view's micro-batch — never
+    // the engine's, whose temp views user calls and other stream threads
+    // shadow and restore concurrently.
     df => {
+      val ss = df.sparkSession
       val src = sessionWm match {
         case Some((c, g)) => df.withWatermark(c, g)
         case None => df
       }
       val prior = scala.util.Try {
-        if (spark.catalog.tableExists(relation) &&
-            spark.catalog.getTable(relation).isTemporary)
-          Some(spark.table(relation))
+        if (ss.catalog.tableExists(relation) &&
+            ss.catalog.getTable(relation).isTemporary)
+          Some(ss.table(relation))
         else None
       }.getOrElse(None)
       src.createOrReplaceTempView(relation)
-      try spark.sql(streamSql)
+      try ss.sql(streamSql)
       finally prior match {
         case Some(p) => p.createOrReplaceTempView(relation)
-        case None => spark.catalog.dropTempView(relation)
+        case None => ss.catalog.dropTempView(relation)
       }
     }
   }
@@ -696,7 +748,14 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * relation's name. The parsed stream is registered as a temp view
     * named after the relation at consume time, so the SQL references it
     * directly. SQL views persist in the catalog and are restored by a
-    * fresh engine over the same metaDir. */
+    * fresh engine over the same metaDir.
+    *
+    * The write path follows the analyzed SQL exactly as for
+    * [[createContinuousView]]: `SELECT k, count(*) AS n, sum(v) AS s …
+    * GROUP BY k` takes the combiner path (its SQL then runs per
+    * micro-batch, in the stream's own session); avg, HAVING and
+    * `count(DISTINCT …)` (rewritten to an HLL sketch) take the state
+    * path. */
   def createContinuousViewSql(name: String, relation: String, sql: String,
                               materialize: String = "parquet"): Unit = synchronized {
     require(Set("memory", "parquet", "append")(materialize),
@@ -711,6 +770,23 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   // --- incremental view materialization ------------------------------------
+
+  /** How a view's delta log is written, folded and read. Recorded in the
+    * view's `_graft_keys` meta, so a restarted engine reads the view before
+    * its consumer starts. `mergeKeys` is None for a stateless transform
+    * (pure append, no merge) and empty for a global aggregate. */
+  private sealed trait ViewMode { def mergeKeys: Option[Seq[String]] }
+  /** Stateless transform: each batch's rows are kept whole. */
+  private case object AppendRows extends ViewMode { def mergeKeys = None }
+  /** State path: a streaming aggregate emits each touched group's running
+    * value, and the newest row per key wins. */
+  private case class NewestPerKey(keys: Seq[String]) extends ViewMode {
+    def mergeKeys = Some(keys)
+  }
+  /** Combiner path: each batch writes its own aggregate as per-key partials,
+    * combined per key by `ops` (column -> "sum" | "min" | "max"). */
+  private case class CombinePartials(keys: Seq[String], ops: Seq[(String, String)])
+      extends ViewMode { def mergeKeys = Some(keys) }
 
   /** Merge-key metadata for a view: `Some(keys)` when the view's top
     * operator is an aggregation (empty = global aggregate, one standing
@@ -734,6 +810,133 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       names
     }
 
+  /** The combine op of an aggregate whose per-batch partials merge by one
+    * more application of an aggregate: count and sum add, min and max
+    * keep the extreme. try_sum is left out: its null-on-overflow does not
+    * survive a second sum. */
+  private val combineOp: PartialFunction[AggregateFunction, String] = {
+    case _: Count => "sum"
+    case s: Sum if s.evalContext.evalMode != EvalMode.TRY => "sum"
+    case _: Min => "min"
+    case _: Max => "max"
+  }
+
+  /** The combiner decomposition of a view, read off its analyzed plan.
+    * `Right` when the root is an Aggregate (only renaming projections above
+    * it) over a stateless input (no watermark, no stateful operator), and
+    * every view column is a grouping key or a non-distinct, unfiltered
+    * count/sum/min/max directly under an alias: a batch's aggregate is then
+    * a partial that combines with any other batch's by [[combineOp]].
+    * `Left` names the plan property that keeps the view on the state
+    * path. */
+  private def combinerPlan(aggDf: DataFrame): Either[String, CombinePartials] = {
+    val root = aggDf.queryExecution.analyzed
+    @annotation.tailrec
+    def peel(p: LogicalPlan, ids: Seq[ExprId]): Either[String, (Aggregate, Seq[ExprId])] =
+      p match {
+        case a: Aggregate => Right((a, ids))
+        case Project(list, child) if list.forall {
+            case _: Attribute | Alias(_: Attribute, _) => true
+            case _ => false
+          } =>
+          val fwd = list.map {
+            case al @ Alias(a: Attribute, _) => al.exprId -> a.exprId
+            case a => a.exprId -> a.exprId
+          }.toMap
+          peel(child, ids.map(fwd))
+        case other => Left(s"the plan's root is ${other.nodeName}, not an Aggregate")
+      }
+    peel(root, root.output.map(_.exprId)).flatMap { case (agg, ids) =>
+      val byId = agg.aggregateExpressions.map(e => e.toAttribute.exprId -> e).toMap
+      val cols = root.output.map(_.name).zip(ids.map(byId))
+      val ops = cols.collect {
+        case (n, Alias(ae: AggregateExpression, _)) if !ae.isDistinct &&
+            ae.filter.isEmpty && combineOp.isDefinedAt(ae.aggregateFunction) =>
+          n -> combineOp(ae.aggregateFunction)
+      }
+      val keys = cols.map {
+        case (n, Alias(e, _)) => (n, e)
+        case c => c
+      }.filter { case (_, e) => agg.groupingExpressions.exists(_.semanticEquals(e)) }
+      cols.collectFirst { case (n, e) if !(ops ++ keys).exists(_._1 == n) =>
+          s"column '$n' is neither a grouping key nor a count/sum/min/max " +
+            s"directly under an alias: ${e.sql}" }
+        .orElse(agg.groupingExpressions.find(g => !keys.exists(_._2.semanticEquals(g)))
+          .map(g => s"grouping expression ${g.sql} is not a view column"))
+        .orElse(agg.child.find {
+            case _: Project | _: Filter | _: SubqueryAlias | _: ViewNode | _: Expand |
+                 _: Generate | _: Union | _: LeafNode => false
+            case _ => true
+          }.map(p => s"the aggregate's input holds a ${p.nodeName}"))
+        .toLeft(CombinePartials(keys.map(_._1), ops))
+    }
+  }
+
+  private def pathName(mode: ViewMode): String = mode match {
+    case _: CombinePartials => "combiner"
+    case _: NewestPerKey => "state"
+    case AppendRows => "append"
+  }
+
+  /** A parquet view's write path (see the writer in consumeBeginWith),
+    * decided from its analyzed plan and its catalog state, and logged once
+    * with the property that decided it. A view whose checkpoint holds
+    * offsets resumes on the path that wrote them: a state-path view (an
+    * older metaDir's count/sum views among them) stays there even when its
+    * plan now combines; any other change of path cannot resume and fails. */
+  private def viewMode(consumer: Int, vname: String, v: View,
+                       aggDf: DataFrame): ViewMode = {
+    // session_window aggregations REQUIRE append mode (Spark rejects
+    // update outright; an update-mode merge would strand stale
+    // sub-sessions anyway), so a session CV must not depend on the caller
+    // remembering materialize="append". The analyzer has already rewritten
+    // SessionWindow into struct arithmetic here, so detect via the marker
+    // metadata it stamps on the session_window output attribute.
+    // (SQL-declared session CVs additionally get their watermark injected
+    // in sqlAgg, where the unresolved call still names the time column and
+    // gap.)
+    val hasSessionWindow = aggDf.queryExecution.analyzed.exists(
+      _.expressions.exists(_.exists {
+        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+          a.metadata.contains("spark.sessionWindow")
+        case _ => false
+      }))
+    val (planMode, why): (ViewMode, String) =
+      if (hasSessionWindow) (AppendRows, "it groups by session_window")
+      else if (v.materialize == "append") (AppendRows, "materialize=\"append\"")
+      else v.keys.orElse(inferViewKeys(aggDf)) match {
+        case None => (AppendRows, "its plan has no aggregate")
+        case Some(keys) =>
+          val combiner =
+            if (Files.exists(outputStreamPath(vname))) Left("it feeds an output stream")
+            else combinerPlan(aggDf).filterOrElse(
+              c => v.keys.forall(_.toSet == c.keys.toSet),
+              "its keys= differ from the plan's grouping keys")
+          combiner match {
+            case Right(c) => (c, "its plan's root is an Aggregate by " +
+              s"[${c.keys.mkString(", ")}] whose columns combine as " +
+              c.ops.map { case (n, op) => s"$op($n)" }.mkString(", "))
+            case Left(why) => (NewestPerKey(keys), why)
+          }
+      }
+    val resumes = maxBatchId(
+      Paths.get(metaDir, "checkpoints", consumer.toString, vname, "offsets")).nonEmpty
+    val prior = Option(viewMetaPath(vname)).filter(Files.exists(_))
+      .map(_ => readViewMeta(vname)).filter(_ => resumes)
+    val (mode, reason) = prior match {
+      case Some(p: NewestPerKey) if planMode.isInstanceOf[CombinePartials] =>
+        (p, "its checkpoint was written by the state path")
+      case Some(p) if pathName(p) != pathName(planMode) =>
+        throw new IllegalStateException(
+          s"continuous view '$vname' now takes the ${pathName(planMode)} " +
+            s"path ($why), but its checkpoint and delta log were written by " +
+            s"the ${pathName(p)} path. Drop and re-create the view.")
+      case _ => (planMode, why)
+    }
+    log.info(s"continuous view '$vname' takes the ${pathName(mode)} path: $reason")
+    mode
+  }
+
   private def viewMetaPath(name: String) = Paths.get(metaDir, "views", name, "_graft_keys")
 
   /** Atomic single-file write (tmp + move): a concurrent reader sees the
@@ -748,21 +951,28 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   /** Recursive delete (grace cleanup / drop DDL). */
   private def rmTree(f: java.io.File): Unit = graft.Fs.rmTree(f)
 
-  private def writeViewMeta(name: String, keysOpt: Option[Seq[String]]): Unit = {
+  private def writeViewMeta(name: String, mode: ViewMode): Unit = {
     Files.createDirectories(Paths.get(metaDir, "views", name))
-    val body = keysOpt match {
-      case None => "append"
-      case Some(ks) => ("merge" +: ks.map(esc)).mkString("\t")
+    val body = mode match {
+      case AppendRows => "append"
+      case NewestPerKey(ks) => ("merge" +: ks.map(esc)).mkString("\t")
+      // base64 never holds ',' or ':', so both lists split safely
+      case CombinePartials(ks, ops) =>
+        Seq("combine", ks.map(esc).mkString(","),
+          ops.map { case (c, op) => esc(c) + ":" + op }.mkString(",")).mkString("\t")
     }
     writeAtomic(viewMetaPath(name), body)
   }
 
-  private def readViewMeta(name: String): Option[Seq[String]] = {
+  private def readViewMeta(name: String): ViewMode = {
     val p = viewMetaPath(name)
     require(Files.exists(p), s"view '$name' has no materialized state yet")
+    def list(f: String) = if (f.isEmpty) Nil else f.split(",", -1).toSeq
     Files.readString(p).split("\t", -1).toSeq match {
-      case Seq("append") => None
-      case "merge" +: ks => Some(ks.map(unesc))
+      case Seq("append") => AppendRows
+      case "merge" +: ks => NewestPerKey(ks.map(unesc))
+      case Seq("combine", ks, ops) => CombinePartials(list(ks).map(unesc),
+        list(ops).map { o => val Array(c, op) = o.split(":", 2); unesc(c) -> op })
       case other => throw new IllegalStateException(s"$p: bad view meta $other")
     }
   }
@@ -831,15 +1041,26 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     s"$metaDir/views/$name/$v"
   }
 
-  /** The read-time merge: newest write per group key wins (keys from the
-    * view meta; None = stateless append, Nil = global aggregate).
-    * `keepBatch` keeps each surviving row's own `__batch` stamp — the
-    * fold's output, so deltas written after the fold still win. */
-  private def mergeDeltas(delta: DataFrame, keysOpt: Option[Seq[String]],
+  /** The read-time merge, by the view's mode. A combiner view combines its
+    * partials per key (Nil keys = global aggregate), each column by its
+    * op and cast back to the column's recorded type (a second sum widens
+    * a decimal). A state-path view keeps the newest write per group key.
+    * A stateless transform keeps every row. `keepBatch` keeps each
+    * surviving row's own `__batch` stamp — the fold's output, so state-path
+    * deltas written after the fold still win. */
+  private def mergeDeltas(delta: DataFrame, mode: ViewMode,
                           keepBatch: Boolean = false): DataFrame =
-    keysOpt match {
-      case None => if (keepBatch) delta else delta.drop("__batch")
-      case Some(keys)
+    mode match {
+      // a keys-only view (SELECT k … GROUP BY k) combines to its distinct keys
+      case CombinePartials(_, Nil) => delta.distinct()
+      case CombinePartials(keys, ops) =>
+        val combined = ops.map { case (c, op) =>
+          combinePartials(op, c).cast(delta.schema(c).dataType).as(c)
+        }
+        delta.groupBy(keys.map(col): _*).agg(combined.head, combined.tail: _*)
+          .select(delta.columns.toIndexedSeq.map(col): _*)
+      case AppendRows => if (keepBatch) delta else delta.drop("__batch")
+      case NewestPerKey(keys)
           if keys.nonEmpty && delta.columns.length > keys.length + 1 =>
         // newest-per-key via max_by aggregation, not a row_number window.
         // The win is PARTIAL (map-side) aggregation: same-key delta rows
@@ -865,7 +1086,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
           .select(out.map(c =>
             if (keys.contains(c)) col(c)
             else col("__top").getField(c).as(c)): _*)
-      case Some(keys) =>
+      case NewestPerKey(keys) =>
         // global aggregates (no keys) merge under a single partition — the
         // delta there is one row per trigger, so the unpartitioned window
         // is a handful of rows, not a scale hazard.
@@ -876,15 +1097,23 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         if (keepBatch) newest else newest.drop("__batch")
     }
 
-  /** A view's current delta log. Merge-mode deltas are flat appended
-    * files; append-mode (stateless transform) deltas live in per-batch
-    * `b<stamp>` subdirs (overwritten on replay — the idempotence unit),
-    * so the read lists recursively. */
-  private def readDeltaLog(curDir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(curDir)
+  /** A view's current delta log. State-path deltas are flat appended
+    * files; combiner partials and stateless-transform rows live in
+    * per-batch `b<stamp>` subdirs (overwritten on replay — the idempotence
+    * unit), so the read lists recursively. A combiner log is read in the
+    * schema recorded at consumeBegin: partials and fold output carry the
+    * same columns, and no footer needs reading to infer them. */
+  private def readDeltaLog(name: String, curDir: String, mode: ViewMode): DataFrame = {
+    val read = spark.read.option("recursiveFileLookup", "true")
+    mode match {
+      case _: CombinePartials => read.schema(recordedSchema(name).get).parquet(curDir)
+      case _ => read.parquet(curDir)
+    }
+  }
 
-  /** Fold high-water mark for append-mode views: the highest stamped
-    * batch already folded into a compacted snapshot. A batch replayed
+  /** Fold high-water mark for views written in `b<stamp>` dirs (combiner
+    * and stateless transform): the highest stamped batch already folded
+    * into a compacted snapshot. A batch replayed
     * AFTER being folded must be skipped, not re-appended — its rows are
     * already in the flat snapshot and the per-batch overwrite can no
     * longer collapse them. */
@@ -896,27 +1125,32 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   /** Current contents of an incrementally-materialized view: parquet
-    * deltas merged so the newest write per group key wins. Merge cost is
+    * deltas merged per group key — a combiner view's partials combine, a
+    * state-path view's newest write wins. Merge cost is
     * O(deltas since compaction), not O(history) — the engine folds the
     * log automatically every `autoCompactEvery` batches (and
     * [[compactViewTable]] can be called any time, consumers running or
     * not). */
   def viewTable(name: String): DataFrame = {
-    val keysOpt = readViewMeta(name)
+    val mode = readViewMeta(name)
     val curDir = viewDeltaDir(name)
     // before the view's first commit the delta dir holds no data to infer
     // a schema from: serve the empty view in the schema recorded at
     // consumeBegin
-    val schemaPath = viewSchemaPath(name)
+    val schema = recordedSchema(name)
     if (!listDir(Paths.get(curDir)).exists(committedLeaves(_).nonEmpty) &&
-        Files.exists(schemaPath))
+        schema.isDefined)
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.DataType.fromJson(Files.readString(schemaPath))
-          .asInstanceOf[StructType])
-    else mergeDeltas(readDeltaLog(curDir), keysOpt)
+        schema.get)
+    else mergeDeltas(readDeltaLog(name, curDir, mode), mode)
   }
 
   private def viewSchemaPath(name: String) = Paths.get(metaDir, "views", name, "_graft_schema")
+
+  private def recordedSchema(name: String): Option[StructType] =
+    Option(viewSchemaPath(name)).filter(Files.exists(_)).map(p =>
+      org.apache.spark.sql.types.DataType.fromJson(Files.readString(p))
+        .asInstanceOf[StructType])
 
   /** The parquet files a delta-dir entry commits: a `part-*` file is its
     * own, a `b<stamp>` batch subdir (append-mode views) holds its batch's
@@ -931,8 +1165,10 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     else Nil
   }
 
-  /** Fold a view's delta log down to one merged snapshot, each row keeping
-    * its own newest `__batch` so future deltas still win the merge.
+  /** Fold a view's delta log down to one merged snapshot: a combiner
+    * view's partials combine to one row per key, a state-path view keeps
+    * each key's newest row with its own `__batch` so future deltas still
+    * win the merge.
     * ONLINE: safe while the view's query runs — its appends wait only for
     * the fold's carry-and-flip step, and readers keep the one-version
     * grace window. The engine runs this same routine on the cadence, on
@@ -946,12 +1182,12 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     *     committed entries;
     *  2. merge — outside the lock, fold exactly those entries into
     *     delta-(v+1) with one shuffle: hash-repartition on the merge keys,
-    *     then newest row per key within each partition (a global
-    *     aggregate keeps its single-partition window);
+    *     then combine or keep the newest row per key within each partition
+    *     (a global aggregate merges in one partition);
     *  3. carry and flip — under the view lock again, hard-link every entry
     *     appended to delta-v since the snapshot into delta-(v+1), swap the
-    *     pointer, record the fold high-water mark (append-mode views) and
-    *     grace-delete versions below v.
+    *     pointer, record the fold high-water mark (views written in
+    *     `b<stamp>` dirs) and grace-delete versions below v.
     * Its jobs run under the job group `graft-fold:<view>`. */
   private def foldView(name: String, targetPartitions: Int,
                        keep: DataFrame => DataFrame): Unit =
@@ -964,17 +1200,17 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       if (snap.isEmpty) return // nothing materialized yet
       val v = cur.getFileName.toString.stripPrefix("delta-").toLong
       val next = cur.resolveSibling(s"delta-${v + 1}")
-      val keysOpt = readViewMeta(name)
+      val mode = readViewMeta(name)
       // the directory read lists delta-v once (a file list would cost a
       // parallel listing job past 32 files); the file-name filter pins the
       // scan to the snapshot — part-file names are unique per write job
-      val delta = readDeltaLog(cur.toString)
+      val delta = readDeltaLog(name, cur.toString, mode)
         .where(col("_metadata.file_name").isin(snap.values.flatten.toSeq: _*))
-      val merged = keysOpt match {
+      val merged = mode.mergeKeys match {
         case Some(keys) if keys.nonEmpty =>
           mergeDeltas(delta.repartition(targetPartitions, keys.map(col): _*),
-            keysOpt, keepBatch = true)
-        case Some(_) => mergeDeltas(delta, keysOpt, keepBatch = true)
+            mode, keepBatch = true)
+        case Some(_) => mergeDeltas(delta, mode, keepBatch = true)
         case None => delta.repartition(targetPartitions)
       }
       val sc = spark.sparkContext
@@ -989,7 +1225,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
             committedLeaves(p).nonEmpty)
           .foreach(p => linkTree(p, next.resolve(p.getFileName.toString)))
         writeAtomic(viewPtrPath(name), next.getFileName.toString)
-        if (keysOpt.isEmpty)
+        if (!mode.isInstanceOf[NewestPerKey])
           snap.keys.filter(_.matches("b\\d+")).map(_.tail.toLong).maxOption
             .foreach(s => writeAtomic(foldedPath(name), s.toString))
         dropDeltaVersionsBelow(name, v)
@@ -1006,6 +1242,27 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         rmTree(p.toFile)
     }
   }
+
+  /** The fresh-lineage reset: flip the view's pointer to a new, empty delta
+    * version. A combiner view calls it when a consumer lineage with no
+    * offsets attaches — that lineage replays the log from its start
+    * position, and its partials must not add onto the ones an earlier
+    * lineage wrote. Holds the fold lock, so no fold is mid-merge; the old
+    * version stays one cycle as the readers' grace window. */
+  private def startEmptyDeltaVersion(name: String): Unit =
+    foldLock(name).synchronized {
+      viewLock(name).synchronized {
+        val cur = Paths.get(viewDeltaDir(name))
+        if (listDir(cur).exists(committedLeaves(_).nonEmpty)) {
+          val v = cur.getFileName.toString.stripPrefix("delta-").toLong
+          val next = cur.resolveSibling(s"delta-${v + 1}")
+          rmTree(next.toFile) // an unreferenced crash leftover
+          Files.createDirectories(next)
+          writeAtomic(viewPtrPath(name), next.getFileName.toString)
+          dropDeltaVersionsBelow(name, v)
+        }
+      }
+    }
 
   // Stream tables use the same versioned-dir + atomic-pointer layout as
   // view deltas (tables/<rel>/data-<v> behind `_graft_current`), so
@@ -1429,6 +1686,13 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     if (wanted.nonEmpty) awaitFolds()
     if (!haveNames.contains(s"${relation}__table__${c.id}") || wanted.nonEmpty) {
       val df = parsedStream(c, ep.url)
+      // every parquet view's aggregate and write path, settled before any
+      // query starts: a view that cannot resume fails here, leaving no
+      // query running untracked
+      val plans = wanted.collect { case (vname, v) if v.materialize != "memory" =>
+        val aggDf = v.agg(df)
+        vname -> (aggDf, viewMode(c.id, vname, v, aggDf))
+      }.toMap
       // B4: every parsed row also lands in the persistent stream table —
       // rows flow whether or not any view aggregates them, like COPY into
       // a PipelineDB stream. Plain foreachBatch append (no _spark_metadata
@@ -1508,95 +1772,105 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 }
               }
           case "parquet" | "append" =>
-            // incremental: update mode emits only the groups each batch
-            // touched; the delta append is atomic and the merge happens at
-            // read ([[viewTable]]) — per-trigger cost ∝ touched groups.
-            // materialize="append" instead runs the aggregation in append
-            // output mode (rows emit exactly once, when the watermark
-            // finalizes them — session windows fuse across batches, so an
-            // update-mode merge would strand stale sub-session rows, and
-            // Spark rejects the combination outright) and takes the
-            // stateless per-batch-subdir write path below: no merge keys,
-            // replay overwrites its own batch dir.
-            val aggDf = v.agg(df)
-            // session_window aggregations REQUIRE append mode (Spark
-            // rejects update outright; an update-mode merge would strand
-            // stale sub-sessions anyway), so a session CV must not depend
-            // on the caller remembering materialize="append". The analyzer
-            // has already rewritten SessionWindow into struct arithmetic
-            // here, so detect via the marker metadata it stamps on the
-            // session_window output attribute. (SQL-declared session CVs
-            // additionally get their watermark injected in sqlAgg, where
-            // the unresolved call still names the time column and gap.)
-            val hasSessionWindow = aggDf.queryExecution.analyzed.exists(
-              _.expressions.exists(_.exists {
-                case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-                  a.metadata.contains("spark.sessionWindow")
-                case _ => false
-              }))
-            if (hasSessionWindow && v.materialize != "append")
-              log.info(s"continuous view '$vname' groups by session_window: " +
-                "materializing append-mode (sessions finalize once, past " +
-                "the watermark)")
-            val keysOpt =
-              if (v.materialize == "append" || hasSessionWindow) None
-              else v.keys.orElse(inferViewKeys(aggDf))
-            writeViewMeta(vname, keysOpt)
-            writeAtomic(viewSchemaPath(vname), aggDf.schema.json)
+            // Three write paths, chosen by viewMode from the analyzed plan
+            // and the view's catalog state (materialize, output stream,
+            // keys=, the path its checkpoint was written by):
+            //  - combiner: the plan is a combinable aggregate (see
+            //    combinerPlan). The query is the parsed stream itself, with
+            //    no state store; each trigger runs the view's aggregate over
+            //    its micro-batch as an ordinary batch plan and writes the
+            //    per-key partials into its own b<stamp> dir. The fold and
+            //    the read combine partials per key. Per-trigger cost is one
+            //    in-batch exchange and the write — no state load/commit.
+            //  - state path: every other aggregate (avg, sketches, HAVING,
+            //    watermarks, custom state behind keys=, output streams,
+            //    which emit each touched group's running value) runs in
+            //    update mode; each trigger appends the touched groups'
+            //    running values, and the newest row per key wins at read.
+            //  - append: a stateless transform, or materialize="append" —
+            //    rows emit once (an append-mode aggregate emits a group
+            //    when the watermark finalizes it; session windows fuse
+            //    across batches, so an update-mode merge would strand
+            //    stale sub-session rows, and Spark rejects the combination
+            //    outright) and land in b<stamp> dirs like partials.
+            val (aggDf, mode) = plans(vname)
+            val emitsOutput = Files.exists(outputStreamPath(vname))
+            val combine = mode.isInstanceOf[CombinePartials]
             // Generation epoch: deltas are stamped (gen << 40) | batchId.
             // A query attaching with a FRESH checkpoint (no offsets — e.g.
             // the consumer was removed and re-created, which deletes its
-            // checkpoints) restarts batch ids at 0; without the epoch its
-            // new writes would LOSE the newest-per-key merge to the old
-            // lineage's higher batch ids and serve stale aggregates until
-            // the new ids caught up. Bumping the persisted generation
-            // makes every new-lineage write order after every old one. A
-            // checkpoint with offsets but no commits (crashed before the
-            // first commit) keeps its generation — Spark replays the same
-            // batch ids, and the merge/overwrite collapses the replay.
+            // checkpoints, or the view attached later) restarts batch ids
+            // at 0 and replays the log from the consumer's start position.
+            // Bumping the persisted generation makes every new-lineage
+            // stamp order after every old one: state-path writes win the
+            // newest-per-key merge at once, and the fold high-water mark
+            // stays monotone across lineages. A checkpoint with offsets but
+            // no commits (crashed before the first commit) keeps its
+            // generation — Spark replays the same batch ids, and the
+            // merge/overwrite collapses the replay.
             val ckpt = Paths.get(metaDir, "checkpoints", c.id.toString, vname)
+            val fresh = maxBatchId(ckpt.resolve("offsets")).isEmpty
+            val prior = Option(viewMetaPath(vname)).filter(Files.exists(_))
+              .map(_ => readViewMeta(vname))
+            val wasCombine = prior.exists(_.isInstanceOf[CombinePartials])
+            Files.createDirectories(Paths.get(metaDir, "views", vname))
             val genPath = Paths.get(metaDir, "views", vname, "_graft_gen")
             val prevGen = if (Files.exists(genPath))
               Files.readString(genPath).trim.toLong else 0L
-            val gen = if (maxBatchId(ckpt.resolve("offsets")).isEmpty)
-              prevGen + 1 else prevGen
+            val gen = if (fresh) prevGen + 1 else prevGen
             if (gen != prevGen) writeAtomic(genPath, gen.toString)
+            // Fresh-lineage rule: under combine, a replay from the start
+            // position would add its partials onto the old lineage's, so
+            // the view restarts empty (a consumer re-created at start_seq
+            // -1 then counts only records put after it). Also on a switch
+            // away from combine: partials do not read as newest rows.
+            if (fresh && (combine || wasCombine)) startEmptyDeltaVersion(vname)
+            writeAtomic(viewSchemaPath(vname), aggDf.schema.json)
+            writeViewMeta(vname, mode)
             // sliding views fold AND reap on the compaction cadence —
             // standing state stays O(live window), not O(history)
             val isSw = Files.exists(swMetaPath(vname))
-            val emitsOutput = Files.exists(outputStreamPath(vname))
-            aggDf.writeStream.queryName(vname)
-              .outputMode(if (keysOpt.isDefined) "update" else "append")
+            val (source, outMode) = mode match {
+              case _: CombinePartials => (df, "append")
+              case _: NewestPerKey => (aggDf, "update")
+              case AppendRows => (aggDf, "append")
+            }
+            source.writeStream.queryName(vname)
+              .outputMode(outMode)
               .foreachBatch { (batch: DataFrame, batchId: Long) =>
                 val stamped = (gen << 40) | batchId
-                // small files (guide §6): an update-mode batch keeps the
-                // state-store partitioning (spark.sql.shuffle.partitions),
-                // so a touched-groups-sized delta would land as cores×
-                // sliver files PER TRIGGER and the merge read pays a
-                // footer+task per sliver until compaction. Pack the write
-                // into at most ViewDeltaFiles tasks; coalesce is narrow,
-                // so state partitions keep their ids and no shuffle is
-                // added. Lazy so append-mode views (keysOpt None, `packed`
-                // never used) don't force physical planning of the
-                // micro-batch via rdd access on every trigger.
-                lazy val packed =
-                  if (batch.rdd.getNumPartitions > ViewDeltaFiles)
-                    batch.coalesce(ViewDeltaFiles)
-                  else batch
-                viewLock(vname).synchronized {
-                  if (keysOpt.isDefined)
-                    packed.withColumn("__batch", lit(stamped))
-                      .write.mode("append").parquet(viewDeltaDir(vname))
-                  // Stateless transforms have no merge key to collapse a
-                  // replay, so idempotence comes from the WRITE: each
-                  // batch owns a b<stamp> subdir, overwritten whole on
-                  // replay — a retried batch replaces its rows instead of
-                  // duplicating them. Batches already folded into a
-                  // compacted snapshot are skipped outright.
-                  else if (stamped > foldedThrough(vname))
-                    batch.withColumn("__batch", lit(stamped))
-                      .write.mode("overwrite")
-                      .parquet(s"${viewDeltaDir(vname)}/b$stamped")
+                mode match {
+                  case _: NewestPerKey =>
+                    // small files (guide §6): an update-mode batch keeps
+                    // the state-store partitioning
+                    // (spark.sql.shuffle.partitions), so a touched-groups-
+                    // sized delta would land as cores× sliver files PER
+                    // TRIGGER and the merge read pays a footer+task per
+                    // sliver until compaction. Pack the write into at most
+                    // ViewDeltaFiles tasks; coalesce is narrow, so state
+                    // partitions keep their ids and no shuffle is added.
+                    val packed = batch.coalesce(ViewDeltaFiles)
+                    viewLock(vname).synchronized {
+                      packed.withColumn("__batch", lit(stamped))
+                        .write.mode("append").parquet(viewDeltaDir(vname))
+                    }
+                  // Partials and transform rows have no newest-wins merge
+                  // to collapse a replay, so idempotence comes from the
+                  // WRITE: each batch owns a b<stamp> subdir, overwritten
+                  // whole on replay — a retried batch replaces its rows
+                  // instead of adding them twice. Batches already folded
+                  // into a compacted snapshot are skipped outright; the
+                  // check shares the write's lock with the fold's flip, so
+                  // a replay racing a fold sees the new high-water mark.
+                  case _ =>
+                    val rows =
+                      if (combine) v.agg(batch).coalesce(ViewDeltaFiles)
+                      else batch.withColumn("__batch", lit(stamped))
+                    viewLock(vname).synchronized {
+                      if (stamped > foldedThrough(vname))
+                        rows.write.mode("overwrite")
+                          .parquet(s"${viewDeltaDir(vname)}/b$stamped")
+                    }
                 }
                 // output stream (CV-over-CV chaining): forward this
                 // trigger's group updates into the view's derived log as
@@ -1621,9 +1895,16 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 // O(groups + autoCompactEvery batch deltas) on a stream
                 // that never stops; sliding views additionally drop
                 // aged-out buckets in the same rewrite. Handed to the
-                // fold thread — this trigger returns without waiting.
+                // fold thread — this trigger returns without waiting. A
+                // view written in b<stamp> dirs also folds once they reach
+                // Spark's parallel-listing threshold (32 by default): past
+                // it, every read and fold lists them with a Spark job.
                 if (autoCompactEvery > 0 && batchId > 0 &&
-                    batchId % autoCompactEvery == 0)
+                    (batchId % autoCompactEvery == 0 ||
+                     !mode.isInstanceOf[NewestPerKey] &&
+                       listDir(Paths.get(viewDeltaDir(vname))).count(
+                         _.getFileName.toString.matches("b\\d+")) >=
+                       spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
                   scheduleFold(vname) {
                     if (isSw) expireSlidingViewTable(vname)
                     else compactViewTable(vname)

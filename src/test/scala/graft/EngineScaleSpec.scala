@@ -11,14 +11,21 @@ import org.apache.spark.sql.types._
   * catalog format versioning. */
 class EngineScaleSpec extends SparkSpec {
 
-  private def mkEngine(meta: String, root: String, stream: String,
-                       view: String): KinesisEngine = {
+  private type Agg = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+
+  private def mkEngine(meta: String, root: String, stream: String, view: String,
+                       agg: Agg = _.groupBy("payload").count()): KinesisEngine = {
     val eng = new KinesisEngine(spark, meta)
     eng.addEndpoint("ep", "r", url = root)
     eng.createStream(stream, StructType(Seq(StructField("payload", StringType))))
-    eng.createContinuousView(view, stream, _.groupBy("payload").count())
+    eng.createContinuousView(view, stream, agg)
     eng
   }
+
+  /** A state-path twin of the default view: avg is not combinable, so the
+    * view keeps a streaming aggregate and the newest-row-per-key merge. */
+  private val avgView: Agg =
+    _.groupBy("payload").agg(count(lit(1)).as("count"), avg(length(col("payload"))).as("a"))
 
   test("arrival timestamps are fixed at put time — replay reproduces identical rows") {
     // reference parity: approximateArrivalTimestamp lives ON the record
@@ -52,12 +59,15 @@ class EngineScaleSpec extends SparkSpec {
     eng.consumeBegin("ep", "s", "hc_stream", format = "text", batchsize = 10000)
     eng.processAllAvailable()
     val deltaDir = eng.viewDeltaDir("hc_view")
-    val afterLoad = spark.read.parquet(deltaDir).count()
+    // the count view takes the combiner path: each batch's partials sit in
+    // their own b<stamp> dir under the delta dir
+    def deltaRows() = spark.read.option("recursiveFileLookup", "true").parquet(deltaDir).count()
+    val afterLoad = deltaRows()
     assert(afterLoad >= 2000L)
     // touch ONE group: the batch must append ~1 row, not rewrite 2000
     ShardedLog.append(s"$root/s", 0, Seq(("k42", "k42")))
     eng.processAllAvailable()
-    val afterOne = spark.read.parquet(deltaDir).count()
+    val afterOne = deltaRows()
     assert(afterOne - afterLoad <= 2L,
       s"1-group update appended ${afterOne - afterLoad} delta rows — " +
         "per-trigger sink cost must track touched groups (complete-mode rewrite is gone)")
@@ -68,30 +78,47 @@ class EngineScaleSpec extends SparkSpec {
     eng.consumeEndAll()
   }
 
-  test("view merge read: max_by aggregate equals a batch recomputation, and plans without a window") {
-    // the newest-per-key delta merge is a max_by aggregate (partial
-    // map-side agg collapses same-key delta rows before the exchange),
-    // not a row_number window: its rows must equal an independent batch
-    // groupBy over the stream table, and the optimized logical plan must
-    // carry an Aggregate and no Window node.
-    val root = tmpDir("mm-root"); val meta = tmpDir("mm-meta")
-    val eng = mkEngine(meta, root, "mm_stream", "mm_view")
+  /** Two batches into a view that overlap key "a"; the read must equal a
+    * batch recomputation and plan as an Aggregate with no Window. Returns
+    * the optimized plan of the read. */
+  private def mergeRead(tag: String, agg: Agg): String = {
+    val root = tmpDir(s"$tag-root"); val meta = tmpDir(s"$tag-meta")
+    val eng = mkEngine(meta, root, s"${tag}_stream", s"${tag}_view", agg)
     ShardedLog.append(s"$root/s", 0, Seq(("a", "a"), ("b", "b"), ("a", "a")))
-    eng.consumeBegin("ep", "s", "mm_stream", format = "text")
+    eng.consumeBegin("ep", "s", s"${tag}_stream", format = "text")
     eng.processAllAvailable()
-    // second batch overlaps key "a" — the merge must pick its newer count
+    // second batch overlaps key "a" — the read must reflect both batches
     ShardedLog.append(s"$root/s", 0, Seq(("a", "a"), ("c", "c")))
     eng.processAllAvailable()
     eng.consumeEndAll()
     def counts(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val merged = counts(eng.viewTable("mm_view"))
-    val batch = counts(eng.streamTable("mm_stream").groupBy("payload").count())
+    val merged = counts(eng.viewTable(s"${tag}_view"))
+    val batch = counts(eng.streamTable(s"${tag}_stream").groupBy("payload").count())
     assert(merged === Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
     assert(merged === batch, "the merged view must equal a batch groupBy over the log")
-    val plan = eng.viewTable("mm_view").queryExecution.optimizedPlan.toString
+    assert(rowsOf(eng.viewTable(s"${tag}_view")) ===
+      rowsOf(agg(eng.streamTable(s"${tag}_stream"))))
+    val plan = eng.viewTable(s"${tag}_view").queryExecution.optimizedPlan.toString
     assert(plan.contains("Aggregate") && !plan.contains("Window"),
       s"optimized merge must be an aggregate, not a window:\n$plan")
+    plan
+  }
+
+  test("view combine read: per-key partials sum to a batch recomputation, no window") {
+    // the default count view takes the combiner path: each batch wrote its
+    // own per-key partial counts, and the read sums them per key
+    val plan = mergeRead("mm", _.groupBy("payload").count())
+    assert(plan.contains("sum(") && !plan.contains("max_by"),
+      s"a combiner read sums partials:\n$plan")
+  }
+
+  test("view merge read (state path): max_by equals a batch recomputation, no window") {
+    // the newest-per-key delta merge is a max_by aggregate (partial
+    // map-side agg collapses same-key delta rows before the exchange),
+    // not a row_number window
+    val plan = mergeRead("mx", avgView)
+    assert(plan.contains("max_by"), s"a state-path read keeps the newest row per key:\n$plan")
   }
 
   test("view compaction folds deltas; merge stays correct; newer deltas still win") {
@@ -472,11 +499,14 @@ class EngineScaleSpec extends SparkSpec {
     eng.consumeEndAll()
   }
 
-  test("a keyed fold merges with one exchange and runs no max(__batch) job") {
-    val root = tmpDir("fx-root"); val meta = tmpDir("fx-meta")
-    val eng = mkEngine(meta, root, "fx_stream", "fx_view")
+  /** Fold a keyed view written by two batches and watch its job group:
+    * the fold must execute two stages (one map stage and the write) with
+    * one exchange, and the folded view must equal a batch recomputation. */
+  private def assertOneExchangeFold(tag: String, agg: Agg): Unit = {
+    val root = tmpDir(s"$tag-root"); val meta = tmpDir(s"$tag-meta")
+    val eng = mkEngine(meta, root, s"${tag}_stream", s"${tag}_view", agg)
     ShardedLog.append(s"$root/s", 0, (1 to 500).map(i => (s"k$i", s"k${i % 50}")))
-    eng.consumeBegin("ep", "s", "fx_stream", format = "text")
+    eng.consumeBegin("ep", "s", s"${tag}_stream", format = "text")
     eng.processAllAvailable()
     ShardedLog.append(s"$root/s", 0, (1 to 100).map(i => (s"m$i", s"k${i % 70}")))
     eng.processAllAvailable()
@@ -490,7 +520,7 @@ class EngineScaleSpec extends SparkSpec {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == "graft-fold:fx_view") {
+            e.properties.getProperty("spark.jobGroup.id") == s"graft-fold:${tag}_view") {
           jobs.add(Job(e.jobId, e.stageInfos.map(_.name)))
           e.stageIds.foreach(inGroup.add)
         }
@@ -503,7 +533,7 @@ class EngineScaleSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      eng.compactViewTable("fx_view")
+      eng.compactViewTable(s"${tag}_view")
       val deadline = System.currentTimeMillis() + 20000
       while (System.currentTimeMillis() < deadline &&
              (jobs.isEmpty || !inGroup.stream().allMatch(done.contains(_))))
@@ -518,8 +548,16 @@ class EngineScaleSpec extends SparkSpec {
       s"the fold executes one map stage and the write, nothing else: $group")
     assert(shuffled.asScala.count(inGroup.contains) === 1,
       s"one exchange in the fold's merge: $group")
-    assert(rowsOf(eng.viewTable("fx_view")) ===
-      rowsOf(eng.streamTable("fx_stream").groupBy("payload").count()))
+    assert(rowsOf(eng.viewTable(s"${tag}_view")) ===
+      rowsOf(agg(eng.streamTable(s"${tag}_stream"))))
+  }
+
+  test("a keyed combiner fold combines with one exchange and runs no other job") {
+    assertOneExchangeFold("fx", _.groupBy("payload").count())
+  }
+
+  test("a keyed state-path fold merges with one exchange and runs no max(__batch) job") {
+    assertOneExchangeFold("fy", avgView)
   }
 
   test("viewTable before the view's first commit is empty, in the view's schema") {
@@ -1185,5 +1223,205 @@ class EngineScaleSpec extends SparkSpec {
     assert(eng.streamTable("cr_stream").collect()
       .map(_.getString(0)).toSeq === Seq("live"),
       "partition compaction succeeded over the leftover, no rows lost")
+  }
+
+  // --- write-path selection: combiner vs state path -------------------------
+
+  private val pathSchema = StructType(Seq(StructField("k", StringType),
+    StructField("v", LongType), StructField("d", DecimalType(10, 2)),
+    StructField("ts", TimestampType)))
+
+  /** `n` csv records `k,v,d,ts` over 7 keys; event times cycle through
+    * 2024-01-01 00:00–00:29, so each key's events form one session. */
+  private def pathRecords(from: Int, n: Int): Seq[(String, String)] =
+    (from until from + n).map { i =>
+      (s"p$i", f"k${i % 7},${i % 10},${i % 13}.${i % 100}%02d,2024-01-01 00:${i % 30}%02d:00")
+    }
+
+  private def stateOps(eng: KinesisEngine, view: String) =
+    eng.activeQueries.find(_.name == view).get.lastProgress.stateOperators
+
+  private def recordedSchema(meta: String, view: String): StructType =
+    DataType.fromJson(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(meta, "views", view, "_graft_schema"))).asInstanceOf[StructType]
+
+  test("combinable views take the combiner path: no state store, recorded types, batch-equal") {
+    val root = tmpDir("cb-root"); val meta = tmpDir("cb-meta")
+    val eng = new KinesisEngine(spark, meta)
+    eng.addEndpoint("ep", "r", url = root)
+    eng.createStream("cb", pathSchema)
+    val closures = Seq[(String, Agg)](
+      "cb_keyed" -> (_.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))),
+      "cb_minmax" -> (_.groupBy("k").agg(min("v").as("lo"), max("ts").as("hi"))),
+      "cb_global" -> (_.agg(count(lit(1)).as("n"))),
+      "cb_decimal" -> (_.groupBy("k").agg(sum("d").as("sd"), count(col("d")).as("nd"))))
+    // the bench shape declares its keys; keys= equal to the grouping keys
+    // keeps the combiner
+    closures.foreach { case (n, f) =>
+      eng.createContinuousView(n, "cb", f, keys = if (n == "cb_keyed") Seq("k") else null) }
+    val sql = "SELECT k, count(*) AS n, sum(v) AS s FROM cb GROUP BY k"
+    eng.sql(s"CREATE CONTINUOUS VIEW cb_sql AS $sql")
+    // every column a grouping key: the partials combine to distinct keys
+    val keysOnly = "SELECT k FROM cb GROUP BY k"
+    eng.sql(s"CREATE CONTINUOUS VIEW cb_keys AS $keysOnly")
+    ShardedLog.append(s"$root/s", 0, pathRecords(0, 60))
+    eng.consumeBegin("ep", "s", "cb", format = "csv", delimiter = ",")
+    eng.processAllAvailable()
+    ShardedLog.append(s"$root/s", 0, pathRecords(60, 25))
+    eng.processAllAvailable()
+    val st = eng.streamTable("cb")
+    val expected = closures.map { case (n, f) => n -> f(st) } :+
+      ("cb_sql" -> eng.sql(sql)) :+ ("cb_keys" -> eng.sql(keysOnly))
+    def check(when: String): Unit = expected.foreach { case (n, batch) =>
+      assert(stateOps(eng, n).isEmpty, s"$n runs without a state store")
+      val got = eng.viewTable(n)
+      assert(got.schema.map(_.dataType) === recordedSchema(meta, n).map(_.dataType),
+        s"$n: combined column types equal the recorded schema ($when)")
+      assert(rowsOf(got) === rowsOf(batch), s"$n equals a batch recomputation ($when)")
+    }
+    check("partials")
+    expected.foreach { case (n, _) => eng.compactViewTable(n) }
+    check("folded")
+    assert(eng.viewTable("cb_decimal").schema("sd").dataType === DecimalType(20, 2),
+      "a second sum widens a decimal; the combine casts it back")
+    eng.consumeEndAll()
+  }
+
+  test("non-combinable views keep the state path, and equal a batch recomputation") {
+    val root = tmpDir("sp-root"); val meta = tmpDir("sp-meta")
+    val eng = new KinesisEngine(spark, meta)
+    eng.addEndpoint("ep", "r", url = root)
+    eng.createStream("sp", pathSchema)
+    eng.createContinuousView("sp_avg", "sp", _.groupBy("k").agg(avg("v").as("a")))
+    val having = "SELECT k, count(*) AS n FROM sp GROUP BY k HAVING count(*) > 11"
+    eng.sql(s"CREATE CONTINUOUS VIEW sp_having AS $having")
+    eng.sql("CREATE CONTINUOUS VIEW sp_distinct AS " +
+      "SELECT k, count(DISTINCT v) AS dv FROM sp GROUP BY k")
+    eng.createSlidingView("sp_sw", "sp", keys = Seq("k"), aggs = Seq("n" -> "count"),
+      width = "1 HOUR", slide = "1 minute")
+    eng.createContinuousView("sp_session", "sp", _.withWatermark("ts", "10 minutes")
+      .groupBy(session_window(col("ts"), "15 minutes"), col("k")).count())
+    eng.createContinuousView("sp_out", "sp", _.groupBy("k").agg(count(lit(1)).as("n")))
+    eng.createOutputStream("sp_out")
+    // one batch: the session view's watermark must not pass any of it
+    ShardedLog.append(s"$root/s", 0, pathRecords(0, 80))
+    eng.consumeBegin("ep", "s", "sp", format = "csv", delimiter = ",",
+      batchsize = 100000)
+    eng.processAllAvailable()
+    // a second batch touches k1 again and pushes the watermark to 02:50,
+    // closing every session of the first batch
+    ShardedLog.append(s"$root/s", 0, Seq(("x", "k1,4,1.50,2024-01-01 02:55:00"),
+      ("y", "zz,3,0.50,2024-01-01 03:00:00")))
+    eng.processAllAvailable()
+    val views = Seq("sp_avg", "sp_having", "sp_distinct", "sp_sw", "sp_session", "sp_out")
+    views.foreach(n => assert(stateOps(eng, n).nonEmpty, s"$n keeps its state store"))
+    val st = eng.streamTable("sp")
+    val byKey = st.groupBy("k")
+    assert(rowsOf(eng.viewTable("sp_avg")) === rowsOf(byKey.agg(avg("v").as("a"))))
+    assert(rowsOf(eng.viewTable("sp_having")) === rowsOf(eng.sql(having)))
+    // count(DISTINCT) is HLL in a continuous view; the same sketch in batch
+    assert(rowsOf(eng.viewTable("sp_distinct")) ===
+      rowsOf(byKey.agg(approx_count_distinct("v").as("dv"))))
+    assert(rowsOf(eng.slidingViewTable("sp_sw")) === rowsOf(byKey.agg(count(lit(1)).as("n"))))
+    assert(rowsOf(eng.viewTable("sp_session")) === rowsOf(
+      st.groupBy(session_window(col("ts"), "15 minutes"), col("k")).count()
+        .where(col("session_window.end") <= lit("2024-01-01 02:50:00").cast("timestamp"))))
+    assert(rowsOf(eng.viewTable("sp_out")) === rowsOf(byKey.agg(count(lit(1)).as("n"))))
+    eng.consumeEndAll()
+  }
+
+  test("a view resumes on the path its checkpoint was written by, or fails before any query starts") {
+    // a HAVING-style filter keeps the view on the state path; without it
+    // the same aggregate combines — the shape an older metaDir's count
+    // view has when a build with the combiner resumes it
+    val filtered: Agg = _.groupBy("payload").count().where(col("count") > 0)
+    def firstRun(meta: String, root: String, agg: Agg, combines: Boolean): Unit = {
+      val eng = mkEngine(meta, root, "rp_stream", "rp_view", agg)
+      ShardedLog.append(s"$root/s", 0, Seq(("a", "x"), ("b", "y")))
+      eng.consumeBegin("ep", "s", "rp_stream", format = "text")
+      eng.processAllAvailable()
+      assert(stateOps(eng, "rp_view").isEmpty === combines)
+      eng.consumeEndAll()
+    }
+    val root = tmpDir("rp-root"); val meta = tmpDir("rp-meta")
+    firstRun(meta, root, filtered, combines = false)
+    val eng = mkEngine(meta, root, "rp_stream", "rp_view")
+    ShardedLog.append(s"$root/s", 0, Seq(("c", "x")))
+    eng.consumeBeginAll()
+    eng.processAllAvailable()
+    assert(stateOps(eng, "rp_view").nonEmpty, "the state path resumes its own checkpoint")
+    assert(rowsOf(eng.viewTable("rp_view")) ===
+      rowsOf(eng.streamTable("rp_stream").groupBy("payload").count()))
+    eng.consumeEndAll()
+
+    val root2 = tmpDir("rq-root"); val meta2 = tmpDir("rq-meta")
+    firstRun(meta2, root2, _.groupBy("payload").count(), combines = true)
+    val refused = mkEngine(meta2, root2, "rp_stream", "rp_view", filtered)
+    val err = intercept[IllegalStateException](refused.consumeBeginAll())
+    assert(err.getMessage.contains("written by the combiner path"), err.getMessage)
+    assert(refused.activeQueries.isEmpty &&
+      !spark.streams.active.exists(_.name == "rp_stream__table__1"),
+      "nothing was started for the refused consumer")
+  }
+
+  test("a combiner view folds before its batch dirs reach the parallel-listing threshold") {
+    // past the threshold, every read would list the b<stamp> dirs with a
+    // Spark job; a small threshold shows the bound in a few batches
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "4")
+    try {
+      val root = tmpDir("lt-root"); val meta = tmpDir("lt-meta")
+      val eng = mkEngine(meta, root, "lt_stream", "lt_view") // cadence 64
+      eng.consumeBegin("ep", "s", "lt_stream", format = "text")
+      (0 until 10).foreach { i =>
+        ShardedLog.append(s"$root/s", 0, Seq((s"r$i", s"p${i % 3}")))
+        eng.processAllAvailable()
+        val dirs = new java.io.File(eng.viewDeltaDir("lt_view")).listFiles()
+          .count(_.getName.matches("b\\d+"))
+        assert(dirs < 4, s"after batch $i: $dirs live batch dirs")
+      }
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(meta, "views", "lt_view", "_graft_folded")))
+      assert(rowsOf(eng.viewTable("lt_view")) ===
+        rowsOf(eng.streamTable("lt_stream").groupBy("payload").count()))
+      eng.consumeEndAll()
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a combiner batch replayed after its fold is skipped, not added twice") {
+    val root = tmpDir("rf-root"); val meta = tmpDir("rf-meta")
+    val eng = mkEngine(meta, root, "rf_stream", "rf_view")
+    ShardedLog.append(s"$root/s", 0, Seq(("a", "x"), ("b", "y")))
+    val id = eng.consumeBegin("ep", "s", "rf_stream", format = "text")
+    eng.processAllAvailable()
+    ShardedLog.append(s"$root/s", 0, Seq(("c", "x")))
+    eng.processAllAvailable()
+    eng.consumeEndAll()
+    // a crash between the partial write and the checkpoint commit of the
+    // last batch: drop its commit record, and Spark re-runs that batch
+    // with the same batch id against the same offsets
+    def dropLastCommit(): Unit = {
+      val commits = new java.io.File(s"$meta/checkpoints/$id/rf_view/commits")
+      val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
+        .maxBy(_.getName.toLong).toPath
+      java.nio.file.Files.delete(last)
+      java.nio.file.Files.deleteIfExists(last.resolveSibling(s".${last.getFileName}.crc"))
+    }
+    def replay(step: String): Unit = {
+      val e = mkEngine(meta, root, "rf_stream", "rf_view")
+      e.consumeBeginAll()
+      e.processAllAvailable()
+      assert(e.activeQueries.find(_.name == "rf_view").get.lastProgress != null,
+        s"$step: the view re-ran its uncommitted batch")
+      e.consumeEndAll()
+      assert(rowsOf(e.viewTable("rf_view")) ===
+        rowsOf(e.streamTable("rf_stream").groupBy("payload").count()), step)
+    }
+    dropLastCommit()
+    replay("a replay before the fold overwrites its own b<stamp> dir")
+    eng.compactViewTable("rf_view")
+    dropLastCommit()
+    replay("a replay after the fold is skipped")
   }
 }
