@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.util.chaining._
 
+import graft.Fs.{listDir, rmTree, writeAtomic}
 import graft.sources.ShardedLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EvalMode, ExprId, NamedExpression}
@@ -45,20 +46,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   *       appends the changed groups' running values as a parquet delta,
   *       and [[viewTable]] keeps the last write per group key.
   *    The engine folds the log ONLINE every `autoCompactEvery` batches
-  *    (versioned dirs + atomic pointer — no consumer stop; see
-  *    [[compactViewTable]]); a log of `b<stamp>` dirs folds sooner, once
-  *    they reach Spark's parallel-listing threshold, so no read lists
-  *    them with a Spark job. The fold runs OFF the trigger path: the
-  *    cadence trigger hands it to one engine-owned background thread and
-  *    returns, and the view's appends wait only for the fold's short
-  *    carry-and-flip step, never for its merge. Per-trigger sink cost is
-  *    O(groups touched by the batch), never O(all groups) — PipelineDB's
-  *    in-place CV update semantics (README.md:78-88) at Spark scale.
-  *    Appends are atomic (each delta file appears wholesale), so readers
-  *    never observe a partial snapshot. `materialize = "memory"` is the
-  *    opt-in complete-mode snapshot, cached DISTRIBUTED across executor
-  *    block managers (never driver-resident); its per-trigger cost is
-  *    O(all groups), which is why parquet/update is the default.
+  *    (no consumer stop; see [[compactViewTable]]); a log of `b<stamp>`
+  *    dirs folds sooner, once they reach Spark's parallel-listing
+  *    threshold, so no read lists them with a Spark job. The fold runs
+  *    OFF the trigger path: the cadence trigger hands it to one
+  *    engine-owned background thread and returns. Per-trigger sink cost
+  *    is O(groups touched by the batch), never O(all groups) —
+  *    PipelineDB's in-place CV update semantics (README.md:78-88) at
+  *    Spark scale.
   *  - `consumeBegin`/`consumeEnd`(`All`) — upsert the consumer (C3),
   *    start/stop one StreamingQuery per continuous view on the target
   *    relation (the bgworker-launch analog, pipeline_kinesis.c:774-823;
@@ -74,6 +69,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   *    kinesis_consumer.cpp:446-465 (now − arrival time of the first
   *    unconsumed record). Tip discovery runs through a monotone per-stream
   *    tail cache, so polling seqnums costs O(appended delta), not O(log).
+  *
+  * Storage: every view's delta log and every stream table is a
+  * [[VersionedDir]] — numbered version dirs behind an atomic
+  * `_graft_current` pointer. Appends land in the live version under a
+  * per-directory lock; readers resolve the pointer lock-free. Every view
+  * fold, table compaction and TTL expiry is one rewrite of that module:
+  * snapshot the entries it consumes, write the next version outside the
+  * lock, then, under it, hard-link every entry it did not consume, write
+  * its durable markers, flip the pointer and grace-delete older versions.
+  * Appends wait only for that last step, never for the rewrite, and
+  * readers never observe a partial version.
   *
   * Catalog durability: endpoints, consumers, stream schemas, SQL-declared
   * views AND sliding views all persist under metaDir (format-versioned
@@ -125,12 +131,10 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   private val endpoints = mutable.LinkedHashMap[String, Endpoint]()
   private val streams = mutable.LinkedHashMap[String, StructType]()
   private val views = mutable.LinkedHashMap[String, View]()
+  private val Materializations = Set("parquet", "append")
   private val consumers = mutable.LinkedHashMap[(String, String, String), Consumer]()
   private val running = mutable.LinkedHashMap[Int, Seq[StreamingQuery]]()
   private val tails = mutable.Map[String, ShardedLog.TailCache]()
-  // memory-materialized views: the current cached snapshot per view, kept
-  // so the previous generation can be unpersisted after each swap
-  private val memSnaps = mutable.Map[String, DataFrame]()
   private var nextId = 1
 
   Files.createDirectories(Paths.get(metaDir))
@@ -296,7 +300,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * running), unregister it, and delete its materialized state. The
     * consumer and its other views keep running. */
   def dropView(name: String): Unit = synchronized {
-    val removed = views.remove(name)
+    views.remove(name)
     running.keys.toSeq.foreach { id =>
       val (dead, alive) = running(id).partition(_.name == name)
       dead.foreach(_.stop())
@@ -304,12 +308,6 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     }
     awaitFolds() // a fold still writing would recreate the dirs dropped below
     foldFailures.remove(name) // not a later view's of the same name
-    if (removed.exists(_.materialize == "memory")) {
-      memSnaps.synchronized(memSnaps.remove(name))
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.dropGlobalTempView(name)
-      spark.catalog.dropTempView(name) // the engine-created session alias
-    }
     saveCatalog()
     rmTree(Paths.get(metaDir, "views", name).toFile)
     // drop the view's checkpoints too: a later view of the same name must
@@ -385,9 +383,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     *        aggregation: rows land exactly once, when the watermark
     *        finalizes them — REQUIRED for session-window aggregations,
     *        which Spark rejects in update mode, and right for any windowed
-    *        agg where only closed windows should surface), or "memory"
-    *        (opt-in demo: complete-mode snapshot queryable via
-    *        `spark.table(name)`, accumulates on the driver).
+    *        agg where only closed windows should surface).
     * @param keys group-key columns for the read-time merge; null = infer
     *        from the view's aggregation (topmost groupBy). Pass explicitly
     *        when the view uses custom stateful operators the inference
@@ -414,8 +410,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                            agg: DataFrame => DataFrame,
                            materialize: String = "parquet",
                            keys: Seq[String] = null): Unit = synchronized {
-    require(Set("memory", "parquet", "append")(materialize),
-      s"materialize=$materialize")
+    require(Materializations(materialize), s"materialize=$materialize")
     views(name) = View(relation, agg, materialize, None, Option(keys))
   }
 
@@ -758,13 +753,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * path. */
   def createContinuousViewSql(name: String, relation: String, sql: String,
                               materialize: String = "parquet"): Unit = synchronized {
-    require(Set("memory", "parquet", "append")(materialize),
-      s"materialize=$materialize")
-    // strict only for the materializations that run session windows in
-    // append mode (watermark mandatory); memory views run complete-mode
-    // snapshots and are legal without one.
-    views(name) = View(relation,
-      sqlAgg(relation, sql, strict = materialize != "memory"),
+    require(Materializations(materialize), s"materialize=$materialize")
+    views(name) = View(relation, sqlAgg(relation, sql, strict = true),
       materialize, Some(sql), None)
     saveCatalog()
   }
@@ -939,18 +929,6 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
 
   private def viewMetaPath(name: String) = Paths.get(metaDir, "views", name, "_graft_keys")
 
-  /** Atomic single-file write (tmp + move): a concurrent reader sees the
-    * old complete content or the new one, never a truncated file. */
-  private def writeAtomic(path: java.nio.file.Path, body: String): Unit = {
-    val tmp = path.resolveSibling("." + path.getFileName + ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Recursive delete (grace cleanup / drop DDL). */
-  private def rmTree(f: java.io.File): Unit = graft.Fs.rmTree(f)
-
   private def writeViewMeta(name: String, mode: ViewMode): Unit = {
     Files.createDirectories(Paths.get(metaDir, "views", name))
     val body = mode match {
@@ -977,20 +955,24 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     }
   }
 
-  // Versioned delta layout: views/<name>/delta-<v>/ plus a `_graft_current`
-  // pointer file naming the live version. Appends take a per-view lock;
-  // readers resolve the pointer lock-free. A fold (see [[foldView]])
-  // holds that lock only to snapshot delta-<v> and, later, to carry what
-  // was appended meanwhile into v+1 and swap the pointer; it deletes
-  // versions ≤ v−1 — the immediately previous version survives one fold
-  // cycle as a grace window for in-flight readers, so folding does NOT
-  // require stopping consumers. Folds of one view serialize on a
-  // separate per-view fold lock that appends never take.
-  private val viewLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def viewLock(name: String): Object =
-    viewLocks.computeIfAbsent(name, _ => new Object)
-  private def foldLock(name: String): Object =
-    viewLocks.computeIfAbsent(s"fold:$name", _ => new Object)
+  // The append lock and the rewrite lock of each versioned dir (a view's
+  // delta log, a stream table's data), by name.
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def lockOf(key: String): Object = locks.computeIfAbsent(key, _ => new Object)
+  private def viewLock(name: String): Object = lockOf(name)
+
+  /** Runs after each durable step of every versioned-dir rewrite of this
+    * engine, with the step's name (see [[VersionedDir]]); a crash test
+    * makes it throw. */
+  @volatile private[graft] var afterDurableStep: String => Unit = _ => ()
+
+  /** A view's delta log: views/<name>/delta-<v>/. Its entries are the
+    * top-level `part-*` files and `b<stamp>` dirs that commit data. */
+  private def viewDir(name: String) =
+    new VersionedDir(Paths.get(metaDir, "views", name), "delta-", viewLock(name),
+      lockOf(s"fold:$name"),
+      cur => listDir(cur).filter(committedLeaves(_).nonEmpty).map(_.getFileName.toString),
+      afterDurableStep(_))
 
   // Cadence folds run on ONE engine-owned thread, created on demand and
   // retired after 10 s idle. It is built without inheriting thread-locals:
@@ -1029,17 +1011,9 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * view's next cadence trigger. */
   private def awaitFolds(): Unit = foldsInFlight.values.forEach(_.get())
 
-  private def viewPtrPath(name: String) = Paths.get(metaDir, "views", name, "_graft_current")
-
   /** Resolve the view's current delta directory (initializing the pointer
     * on first use). Exposed for tests/inspection. */
-  def viewDeltaDir(name: String): String = {
-    val p = viewPtrPath(name)
-    val v =
-      if (Files.exists(p)) Files.readString(p)
-      else { Files.createDirectories(p.getParent); writeAtomic(p, "delta-0"); "delta-0" }
-    s"$metaDir/views/$name/$v"
-  }
+  def viewDeltaDir(name: String): String = viewDir(name).current.toString
 
   /** The read-time merge, by the view's mode. A combiner view combines its
     * partials per key (Nil keys = global aggregate), each column by its
@@ -1177,35 +1151,31 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     foldView(name, targetPartitions, identity)
 
   /** The one fold routine behind [[compactViewTable]] and
-    * [[expireSlidingViewTable]] (`keep` filters the merged rows):
-    *  1. snapshot — under the view lock, resolve delta-v and list its
-    *     committed entries;
-    *  2. merge — outside the lock, fold exactly those entries into
-    *     delta-(v+1) with one shuffle: hash-repartition on the merge keys,
-    *     then combine or keep the newest row per key within each partition
-    *     (a global aggregate merges in one partition);
-    *  3. carry and flip — under the view lock again, hard-link every entry
-    *     appended to delta-v since the snapshot into delta-(v+1), swap the
-    *     pointer, record the fold high-water mark (views written in
-    *     `b<stamp>` dirs) and grace-delete versions below v.
-    * Its jobs run under the job group `graft-fold:<view>`. */
+    * [[expireSlidingViewTable]] (`keep` filters the merged rows): one
+    * [[VersionedDir]] rewrite that consumes every committed entry of
+    * delta-v and merges exactly those entries into delta-(v+1) with one
+    * shuffle — hash-repartition on the merge keys, then combine or keep
+    * the newest row per key within each partition (a global aggregate
+    * merges in one partition). Its durable marker is the fold high-water
+    * mark of views written in `b<stamp>` dirs. Its jobs run under the job
+    * group `graft-fold:<view>`. */
   private def foldView(name: String, targetPartitions: Int,
-                       keep: DataFrame => DataFrame): Unit =
-    foldLock(name).synchronized {
-      val (cur, snap) = viewLock(name).synchronized {
-        val cur = Paths.get(viewDeltaDir(name))
-        (cur, listDir(cur).map(p => p.getFileName.toString -> committedLeaves(p))
-          .filter(_._2.nonEmpty).toMap)
-      }
-      if (snap.isEmpty) return // nothing materialized yet
-      val v = cur.getFileName.toString.stripPrefix("delta-").toLong
-      val next = cur.resolveSibling(s"delta-${v + 1}")
-      val mode = readViewMeta(name)
+                       keep: DataFrame => DataFrame): Unit = {
+    lazy val mode = readViewMeta(name)
+    // written before the pointer flip: a batch the snapshot holds whose
+    // commit a crash loses is then skipped on replay whichever version is
+    // live — before the flip its b<stamp> dir is still there, after it
+    // its partials are in the folded snapshot
+    def markFolded(snap: Seq[String]): Unit =
+      if (!mode.isInstanceOf[NewestPerKey])
+        snap.filter(_.matches("b\\d+")).map(_.tail.toLong).maxOption
+          .foreach(s => writeAtomic(foldedPath(name), s.toString))
+    viewDir(name).rewrite(_ => true, markFolded) { (cur, snap, next) =>
       // the directory read lists delta-v once (a file list would cost a
       // parallel listing job past 32 files); the file-name filter pins the
       // scan to the snapshot — part-file names are unique per write job
-      val delta = readDeltaLog(name, cur.toString, mode)
-        .where(col("_metadata.file_name").isin(snap.values.flatten.toSeq: _*))
+      val delta = readDeltaLog(name, cur.toString, mode).where(col("_metadata.file_name")
+        .isin(snap.flatMap(e => committedLeaves(cur.resolve(e))): _*))
       val merged = mode.mergeKeys match {
         case Some(keys) if keys.nonEmpty =>
           mergeDeltas(delta.repartition(targetPartitions, keys.map(col): _*),
@@ -1220,73 +1190,46 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       sc.setJobGroup(s"graft-fold:$name", s"fold view $name")
       try keep(merged).write.mode("overwrite").parquet(next.toString)
       finally prior.foreach { case (k, p) => sc.setLocalProperty(k, p) }
-      viewLock(name).synchronized {
-        listDir(cur).filter(p => !snap.contains(p.getFileName.toString) &&
-            committedLeaves(p).nonEmpty)
-          .foreach(p => linkTree(p, next.resolve(p.getFileName.toString)))
-        writeAtomic(viewPtrPath(name), next.getFileName.toString)
-        if (!mode.isInstanceOf[NewestPerKey])
-          snap.keys.filter(_.matches("b\\d+")).map(_.tail.toLong).maxOption
-            .foreach(s => writeAtomic(foldedPath(name), s.toString))
-        dropDeltaVersionsBelow(name, v)
-      }
-    }
-
-  /** Delete delta versions strictly below `keepFrom` (grace cleanup). */
-  private def dropDeltaVersionsBelow(name: String, keepFrom: Long): Unit = {
-    listDir(Paths.get(metaDir, "views", name)).foreach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("delta-") &&
-          n.stripPrefix("delta-").forall(_.isDigit) &&
-          n.stripPrefix("delta-").toLong < keepFrom)
-        rmTree(p.toFile)
     }
   }
 
-  /** The fresh-lineage reset: flip the view's pointer to a new, empty delta
-    * version. A combiner view calls it when a consumer lineage with no
-    * offsets attaches — that lineage replays the log from its start
-    * position, and its partials must not add onto the ones an earlier
-    * lineage wrote. Holds the fold lock, so no fold is mid-merge; the old
-    * version stays one cycle as the readers' grace window. */
+  /** The fresh-lineage reset: a rewrite that consumes the whole delta log
+    * and writes nothing, so the view's pointer names a new, empty version.
+    * A combiner view calls it when a consumer lineage with no offsets
+    * attaches — that lineage replays the log from its start position, and
+    * its partials must not add onto the ones an earlier lineage wrote. */
   private def startEmptyDeltaVersion(name: String): Unit =
-    foldLock(name).synchronized {
-      viewLock(name).synchronized {
-        val cur = Paths.get(viewDeltaDir(name))
-        if (listDir(cur).exists(committedLeaves(_).nonEmpty)) {
-          val v = cur.getFileName.toString.stripPrefix("delta-").toLong
-          val next = cur.resolveSibling(s"delta-${v + 1}")
-          rmTree(next.toFile) // an unreferenced crash leftover
-          Files.createDirectories(next)
-          writeAtomic(viewPtrPath(name), next.getFileName.toString)
-          dropDeltaVersionsBelow(name, v)
-        }
-      }
-    }
+    viewDir(name).rewrite(_ => true)((_, _, _) => ())
 
-  // Stream tables use the same versioned-dir + atomic-pointer layout as
-  // view deltas (tables/<rel>/data-<v> behind `_graft_current`), so
-  // compaction and TTL expiry run ONLINE — no consumer stop. Appends and
-  // rewrites serialize on a per-relation lock; readers resolve the
-  // pointer lock-free with the one-version grace window. WITHIN a
+  // Stream tables are versioned dirs too (tables/<rel>/data-<v>), so
+  // compaction and TTL expiry run ONLINE — no consumer stop. WITHIN a
   // version, rows are Hive-partitioned by arrival DATE
   // (`__arrival_date=YYYY-MM-DD/`), which is what makes TTL expiry
   // O(dropped data) instead of O(table) — see [[expireStreamTable]].
-  private def tableLock(relation: String): Object =
-    viewLocks.computeIfAbsent(s"table:$relation", _ => new Object)
+  private def tableLock(relation: String): Object = lockOf(s"table:$relation")
 
-  private def tablePtrPath(relation: String) =
-    Paths.get(metaDir, "tables", relation, "_graft_current")
+  private val DatePart = "__arrival_date="
+
+  /** A stream table's data: tables/<rel>/data-<v>/. Its entries are its
+    * data files — `__arrival_date=<d>/<file>` per date partition, plus the
+    * flat files of a table written before date partitioning. */
+  private def tableDir(relation: String) = {
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    new VersionedDir(Paths.get(metaDir, "tables", relation), "data-",
+      tableLock(relation), lockOf(s"tablefold:$relation"),
+      cur => listDir(cur).flatMap { p =>
+        val n = p.getFileName.toString
+        if (n.startsWith(DatePart))
+          listDir(p).map(_.getFileName.toString).filterNot(hidden).map(f => s"$n/$f")
+        else if (hidden(n) || Files.isDirectory(p)) Nil
+        else Seq(n)
+      },
+      afterDurableStep(_))
+  }
 
   /** Resolve the relation's current table data directory (initializing
     * the pointer on first use). */
-  def tableDataDir(relation: String): String = {
-    val p = tablePtrPath(relation)
-    val v =
-      if (Files.exists(p)) Files.readString(p)
-      else { Files.createDirectories(p.getParent); writeAtomic(p, "data-0"); "data-0" }
-    s"$metaDir/tables/$relation/$v"
-  }
+  def tableDataDir(relation: String): String = tableDir(relation).current.toString
 
   private def tableSchema(relation: String): StructType =
     streams(relation).add(StructField("arrival_timestamp", TimestampType))
@@ -1302,54 +1245,17 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       .parquet(tableDataDir(relation))
       .drop("__arrival_date")
 
-  /** Grace cleanup: delete table versions strictly below `keepFrom` (the
-    * immediately previous version survives one cycle for in-flight
-    * readers). Hard-linked data files shared with the live version are
-    * only unlinked, never destroyed. */
-  private def dropTableVersionsBelow(relation: String, keepFrom: Long): Unit =
-    listDir(Paths.get(metaDir, "tables", relation)).foreach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("data-") && n.stripPrefix("data-").forall(_.isDigit) &&
-          n.stripPrefix("data-").toLong < keepFrom)
-        rmTree(p.toFile)
-    }
-
-  /** Rewrite the stream table through a versioned swap: write the
-    * refolded rows as data-<v+1> (date-partitioned), flip the pointer,
-    * grace-delete versions ≤ v−1. Online — appends serialize on the
-    * relation lock. */
-  private def rewriteStreamTable(relation: String, targetPartitions: Int)
-                                (xform: DataFrame => DataFrame): Unit =
-    tableLock(relation).synchronized {
-      val curDir = tableDataDir(relation)
-      if (!Files.exists(Paths.get(curDir))) return // nothing ingested yet
-      val v = Paths.get(curDir).getFileName.toString.stripPrefix("data-").toLong
-      xform(streamTable(relation))
-        .withColumn("__arrival_date", to_date(col("arrival_timestamp")))
-        // keyed repartition: one task (→ one file) per date, up to
-        // targetPartitions tasks — compaction output stays partitioned
-        .repartition(targetPartitions, col("__arrival_date"))
-        .write.partitionBy("__arrival_date").mode("overwrite")
-        .parquet(s"$metaDir/tables/$relation/data-${v + 1}")
-      writeAtomic(tablePtrPath(relation), s"data-${v + 1}")
-      dropTableVersionsBelow(relation, v)
-    }
-
-  /** Recursive hard-link mirror: `dst` gets the same tree as `src` with
-    * every regular file hard-linked (same inodes — zero data copied or
-    * rewritten). The unit of O(1) partition carry-over in
-    * [[expireStreamTable]], the same metadata-only move a table format
-    * (Hive/Iceberg) does by rewriting only the partition manifest. */
-  private def linkTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-    if (Files.isDirectory(src)) {
-      Files.createDirectories(dst)
-      listDir(src).foreach(c => linkTree(c, dst.resolve(c.getFileName)))
-    } else try Files.createLink(dst, src) catch {
-      // filesystem without hard links: carry by copy — correct, just not
-      // metadata-only (parquet files are immutable either way)
-      case _: UnsupportedOperationException =>
-        Files.copy(src, dst, java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    }
+  /** The rows of table entries `files` of version `cur`, read by listing
+    * `dir` (`cur` or one of its date partitions) once and pinning the scan
+    * to the files by their partition dir and name — a file list would cost
+    * a parallel listing job past 32 files, and one write job names its
+    * files alike in every partition. */
+  private def tableRows(relation: String, dir: java.nio.file.Path,
+                        cur: java.nio.file.Path, files: Seq[String]): DataFrame =
+    spark.read.schema(tableSchema(relation)).option("recursiveFileLookup", "true")
+      .parquet(dir.toString)
+      .where(substring_index(col("_metadata.file_path"), "/", -2).isin(
+        files.map(f => if (f.contains('/')) f else s"${cur.getFileName}/$f"): _*))
 
   /** PipelineDB sliding-window view analog (`WITH (sw = '5 minutes')`):
     * a query-time view over only the rows that arrived within `width` of
@@ -1371,117 +1277,92 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   /** PipelineDB TTL analog: physically drop stream-table rows whose
-    * arrival_timestamp is older than the TTL. ONLINE (versioned swap +
-    * pointer flip) — runs while the consumer keeps ingesting, which is
+    * arrival_timestamp is older than the TTL. ONLINE (a [[VersionedDir]]
+    * rewrite) — runs while the consumer keeps ingesting, which is
     * exactly when a TTL'd stream needs reaping.
     *
     * O(dropped data), never O(table): the table is Hive-partitioned by
     * arrival date, so per partition the reap is
-    *  - fully expired (date < cutoff date) → DROPPED by omission — the
-    *    partition is simply not carried into the next version; zero I/O;
-    *  - fully live (date > cutoff date) → HARD-LINKED into the next
-    *    version — metadata-only, data files untouched (the
+    *  - fully expired (date < cutoff date) → DROPPED by omission — its
+    *    files are consumed and nothing is written for them; zero I/O;
+    *  - fully live (date > cutoff date) → not consumed, so HARD-LINKED
+    *    into the next version — metadata-only, data files untouched (the
     *    drop-partition pattern of Hive/Iceberg manifests);
     *  - the single BOUNDARY partition straddling the cutoff → the only
     *    one whose rows are actually read and rewritten filtered.
     * At continuous-ingest scale a daily reap therefore rewrites at most
     * one day of data regardless of how much history the table holds. */
   def expireStreamTable(relation: String, ttl: String,
-                        targetPartitions: Int = 8): Unit =
-    tableLock(relation).synchronized {
-      val curDir = tableDataDir(relation)
-      if (!Files.exists(Paths.get(curDir))) return // nothing ingested yet
-      val v = Paths.get(curDir).getFileName.toString.stripPrefix("data-").toLong
-      // cutoff instant AND its date string evaluated by ONE Spark query so
-      // both use the session time zone the partition values were written in
-      val cutRow = spark.sql(
-        s"SELECT current_timestamp() - INTERVAL $ttl AS t, " +
-          s"CAST(to_date(current_timestamp() - INTERVAL $ttl) AS STRING) AS d")
-        .head()
-      val cutTs = cutRow.getTimestamp(0)
-      val cutDate = cutRow.getString(1)
-      // fail-fast on the flat pre-partitioned layout (same policy as the
-      // catalog header and shard-log magic): expiring by partition over a
-      // layout that has none would silently drop every row
-      if (listDir(Paths.get(curDir))
-            .exists(_.getFileName.toString.endsWith(".parquet")))
-        throw new IllegalStateException(
-          s"$curDir holds flat (pre-date-partitioned) parquet files — run " +
-            s"compactStreamTable('$relation') once to migrate to the " +
-            "partitioned layout before TTL expiry")
-      val newName = s"data-${v + 1}"
-      val newDir = Paths.get(metaDir, "tables", relation, newName)
-      // crash recovery: a leftover data-<v+1> from a run that died before
-      // the pointer flip is unreferenced (the pointer still names data-<v>)
-      // — clear it, or the hard-link carry below throws on every retry
-      if (Files.exists(newDir)) rmTree(newDir.toFile)
-      Files.createDirectories(newDir)
-      listDir(Paths.get(curDir))
-        .filter(_.getFileName.toString.startsWith("__arrival_date="))
-        .foreach { p =>
-          val d = p.getFileName.toString.stripPrefix("__arrival_date=")
-          // ISO dates compare correctly as strings
-          if (d > cutDate) linkTree(p, newDir.resolve(p.getFileName.toString))
-          else if (d == cutDate)
-            spark.read.schema(tableSchema(relation)).parquet(p.toString)
-              .filter(col("arrival_timestamp") >= lit(cutTs))
-              .repartition(targetPartitions)
-              .write.mode("overwrite")
-              .parquet(newDir.resolve(p.getFileName.toString).toString)
-          // else: dead partition — dropped by omission
-        }
-      writeAtomic(tablePtrPath(relation), newName)
-      dropTableVersionsBelow(relation, v)
+                        targetPartitions: Int = 8): Unit = {
+    val live = Paths.get(tableDataDir(relation))
+    // fail-fast on the flat pre-partitioned layout (same policy as the
+    // catalog header and shard-log magic): expiring by partition over a
+    // layout that has none would never expire a row
+    if (listDir(live).exists(_.getFileName.toString.endsWith(".parquet")))
+      throw new IllegalStateException(
+        s"$live holds flat (pre-date-partitioned) parquet files — run " +
+          s"compactStreamTable('$relation') once to migrate to the " +
+          "partitioned layout before TTL expiry")
+    // cutoff instant AND its date string evaluated by ONE Spark query so
+    // both use the session time zone the partition values were written in
+    val cutRow = spark.sql(
+      s"SELECT current_timestamp() - INTERVAL $ttl AS t, " +
+        s"CAST(to_date(current_timestamp() - INTERVAL $ttl) AS STRING) AS d")
+      .head()
+    val cutTs = cutRow.getTimestamp(0)
+    val cutDate = cutRow.getString(1)
+    val boundary = DatePart + cutDate
+    // ISO dates compare correctly as strings
+    tableDir(relation).rewrite(e => e.startsWith(DatePart) &&
+        e.takeWhile(_ != '/').stripPrefix(DatePart) <= cutDate) { (cur, snap, next) =>
+      val cut = snap.filter(_.startsWith(boundary + "/"))
+      if (cut.nonEmpty)
+        tableRows(relation, cur.resolve(boundary), cur, cut)
+          .filter(col("arrival_timestamp") >= lit(cutTs))
+          .repartition(targetPartitions)
+          .write.mode("overwrite")
+          .parquet(next.resolve(boundary).toString)
     }
+  }
 
   /** Compact a stream table: streaming append writes one file per
     * micro-batch per shard, which at continuous-ingest scale degrades
     * every downstream scan (the small-files problem). ONLINE: rewrites
     * into `targetPartitions` files behind the version pointer while the
-    * consumer keeps appending. O(table) — for continuous maintenance use
-    * [[compactStreamTablePartition]], which touches only the partition
-    * that is actually accumulating files. */
+    * consumer keeps appending; also migrates flat files of a table written
+    * before date partitioning into date partitions. O(table) — for
+    * continuous maintenance use [[compactStreamTablePartition]], which
+    * touches only the partition that is actually accumulating files. */
   def compactStreamTable(relation: String, targetPartitions: Int = 8): Unit =
-    rewriteStreamTable(relation, targetPartitions)(identity)
-
-  /** Compact ONE date partition (Iceberg-style partial compaction):
-    * every other partition is carried into the next version by hard link
-    * (metadata-only), the target is rewritten into `targetPartitions`
-    * files. This is the O(one partition) maintenance op a continuously
-    * ingesting table needs — small files only ever accumulate in the
-    * partition currently receiving appends, so folding just that one
-    * bounds scan degradation without ever rewriting history. The engine
-    * runs it automatically on the current date every `autoCompactEvery`
-    * table batches. */
-  def compactStreamTablePartition(relation: String, date: String,
-                                  targetPartitions: Int = 8): Unit =
-    tableLock(relation).synchronized {
-      val curDir = tableDataDir(relation)
-      if (!Files.exists(Paths.get(curDir))) return
-      val target = s"__arrival_date=$date"
-      val tgtPath = Paths.get(curDir, target)
-      if (!Files.exists(tgtPath)) return // nothing ingested for that date
-      val v = Paths.get(curDir).getFileName.toString.stripPrefix("data-").toLong
-      val newName = s"data-${v + 1}"
-      val newDir = Paths.get(metaDir, "tables", relation, newName)
-      // crash recovery: see expireStreamTable — an unreferenced leftover
-      // data-<v+1> must not wedge the retry's hard-link carry (this op is
-      // auto-invoked from the table sink, so a wedge fails every batch)
-      if (Files.exists(newDir)) rmTree(newDir.toFile)
-      Files.createDirectories(newDir)
-      listDir(Paths.get(curDir))
-        .filter(_.getFileName.toString.startsWith("__arrival_date="))
-        .foreach { p =>
-          if (p.getFileName.toString == target)
-            spark.read.schema(tableSchema(relation)).parquet(p.toString)
-              .repartition(targetPartitions)
-              .write.mode("overwrite")
-              .parquet(newDir.resolve(target).toString)
-          else linkTree(p, newDir.resolve(p.getFileName.toString))
-        }
-      writeAtomic(tablePtrPath(relation), newName)
-      dropTableVersionsBelow(relation, v)
+    tableDir(relation).rewrite(_ => true) { (cur, snap, next) =>
+      tableRows(relation, cur, cur, snap)
+        .withColumn("__arrival_date", to_date(col("arrival_timestamp")))
+        // keyed repartition: one task (→ one file) per date, up to
+        // targetPartitions tasks — compaction output stays partitioned
+        .repartition(targetPartitions, col("__arrival_date"))
+        .write.partitionBy("__arrival_date").mode("overwrite")
+        .parquet(next.toString)
     }
+
+  /** Compact ONE date partition (Iceberg-style partial compaction): the
+    * target's files are rewritten into `targetPartitions` files, and every
+    * other entry is carried into the next version by hard link
+    * (metadata-only). This is the O(one partition) maintenance op a
+    * continuously ingesting table needs — small files only ever accumulate
+    * in the partition currently receiving appends, so folding just that
+    * one bounds scan degradation without ever rewriting history. The
+    * engine runs it automatically on the current date every
+    * `autoCompactEvery` table batches. */
+  def compactStreamTablePartition(relation: String, date: String,
+                                  targetPartitions: Int = 8): Unit = {
+    val target = DatePart + date
+    tableDir(relation).rewrite(_.startsWith(target + "/")) { (cur, snap, next) =>
+      tableRows(relation, cur.resolve(target), cur, snap)
+        .repartition(targetPartitions)
+        .write.mode("overwrite")
+        .parquet(next.resolve(target).toString)
+    }
+  }
 
   // --- data plane ---------------------------------------------------------
 
@@ -1665,8 +1546,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     // View queries are singletons ACROSS consumers: a second consumer on
     // the same relation must not start a duplicate view query — two
     // update streams with independent checkpoints would interleave
-    // conflicting batch ids into one delta log (and a memory sink would
-    // throw on the name collision). The stream TABLE does union multiple
+    // conflicting batch ids into one delta log. The stream TABLE does union multiple
     // consumers (each gets its own append query + checkpoint); views are
     // maintained from the first consumer's stream and that restriction is
     // logged.
@@ -1681,6 +1561,13 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         log.warn(s"view '$vname' is already maintained from another consumer " +
           s"of '$relation'; consumer ${c.id} feeds only the stream table")
     }
+    // a catalog row of the removed in-memory materialization still loads
+    // (so the view can be dropped) but is never maintained
+    wanted.find(_._2.materialize == "memory").foreach { case (vname, _) =>
+      throw new IllegalStateException(s"continuous view '$vname' uses " +
+        "materialize=\"memory\", which no longer exists. Drop and re-create " +
+        "the view (parquet is the default).")
+    }
     // a (re)started view query may replay its last batch, which rewrites
     // that batch's delta: never under a fold still reading it
     if (wanted.nonEmpty) awaitFolds()
@@ -1689,7 +1576,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
       // every parquet view's aggregate and write path, settled before any
       // query starts: a view that cannot resume fails here, leaving no
       // query running untracked
-      val plans = wanted.collect { case (vname, v) if v.materialize != "memory" =>
+      val plans = wanted.map { case (vname, v) =>
         val aggDf = v.agg(df)
         vname -> (aggDf, viewMode(c.id, vname, v, aggDf))
       }.toMap
@@ -1723,8 +1610,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 batchId % autoCompactEvery == 0) {
               val dates = listDir(Paths.get(tableDataDir(relation)))
                 .map(_.getFileName.toString)
-                .filter(_.startsWith("__arrival_date="))
-                .map(_.stripPrefix("__arrival_date="))
+                .filter(_.startsWith(DatePart))
+                .map(_.stripPrefix(DatePart))
               if (dates.nonEmpty)
                 compactStreamTablePartition(relation, dates.max)
             }
@@ -1733,185 +1620,145 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
           .pipe(w => effTrig.fold(w)(w.trigger))
           .start())
       val viewQs = wanted.map { case (vname, v) =>
-        val writer = v.materialize match {
-          case "memory" =>
-            // Complete-mode snapshot materialized into executor
-            // block-manager cache (MEMORY_AND_DISK), NOT the driver-
-            // resident memory sink: every trigger re-emits the full
-            // aggregate (complete mode's contract — per-trigger cost is
-            // O(all groups), which is why parquet/update stays the scale
-            // path), the fresh snapshot is persisted distributed, swapped
-            // in under the view lock, and no row is ever collected to the
-            // driver. `spark.table(vname)` keeps working through a
-            // text-based session view that re-resolves the shared global
-            // temp view (the swap target) on every read.
-            log.warn(s"continuous view '$vname' uses the in-memory complete-mode " +
-              "snapshot: each trigger rewrites all groups into executor cache. " +
-              "The default materialize=\"parquet\" is the incremental scale path.")
-            val aggDf = v.agg(df)
-            // exists-check: an ACTIVATE / repeated consume_begin must not
-            // wipe the still-queryable snapshot back to empty
-            if (!spark.catalog.tableExists(s"global_temp.$vname"))
-              spark.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  aggDf.schema)
-                .createOrReplaceGlobalTempView(vname)
-            spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $vname AS " +
-              s"SELECT * FROM global_temp.$vname")
-            aggDf.writeStream.queryName(vname)
-              .outputMode("complete")
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                viewLock(vname).synchronized {
-                  val snap = batch.persist(
-                    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                  snap.count() // materialize fully before dropping the old one
-                  snap.createOrReplaceGlobalTempView(vname)
-                  memSnaps.synchronized {
-                    memSnaps.put(vname, snap)
-                  }.foreach(_.unpersist(blocking = false))
-                }
-              }
-          case "parquet" | "append" =>
-            // Three write paths, chosen by viewMode from the analyzed plan
-            // and the view's catalog state (materialize, output stream,
-            // keys=, the path its checkpoint was written by):
-            //  - combiner: the plan is a combinable aggregate (see
-            //    combinerPlan). The query is the parsed stream itself, with
-            //    no state store; each trigger runs the view's aggregate over
-            //    its micro-batch as an ordinary batch plan and writes the
-            //    per-key partials into its own b<stamp> dir. The fold and
-            //    the read combine partials per key. Per-trigger cost is one
-            //    in-batch exchange and the write — no state load/commit.
-            //  - state path: every other aggregate (avg, sketches, HAVING,
-            //    watermarks, custom state behind keys=, output streams,
-            //    which emit each touched group's running value) runs in
-            //    update mode; each trigger appends the touched groups'
-            //    running values, and the newest row per key wins at read.
-            //  - append: a stateless transform, or materialize="append" —
-            //    rows emit once (an append-mode aggregate emits a group
-            //    when the watermark finalizes it; session windows fuse
-            //    across batches, so an update-mode merge would strand
-            //    stale sub-session rows, and Spark rejects the combination
-            //    outright) and land in b<stamp> dirs like partials.
-            val (aggDf, mode) = plans(vname)
-            val emitsOutput = Files.exists(outputStreamPath(vname))
-            val combine = mode.isInstanceOf[CombinePartials]
-            // Generation epoch: deltas are stamped (gen << 40) | batchId.
-            // A query attaching with a FRESH checkpoint (no offsets — e.g.
-            // the consumer was removed and re-created, which deletes its
-            // checkpoints, or the view attached later) restarts batch ids
-            // at 0 and replays the log from the consumer's start position.
-            // Bumping the persisted generation makes every new-lineage
-            // stamp order after every old one: state-path writes win the
-            // newest-per-key merge at once, and the fold high-water mark
-            // stays monotone across lineages. A checkpoint with offsets but
-            // no commits (crashed before the first commit) keeps its
-            // generation — Spark replays the same batch ids, and the
-            // merge/overwrite collapses the replay.
-            val ckpt = Paths.get(metaDir, "checkpoints", c.id.toString, vname)
-            val fresh = maxBatchId(ckpt.resolve("offsets")).isEmpty
-            val prior = Option(viewMetaPath(vname)).filter(Files.exists(_))
-              .map(_ => readViewMeta(vname))
-            val wasCombine = prior.exists(_.isInstanceOf[CombinePartials])
-            Files.createDirectories(Paths.get(metaDir, "views", vname))
-            val genPath = Paths.get(metaDir, "views", vname, "_graft_gen")
-            val prevGen = if (Files.exists(genPath))
-              Files.readString(genPath).trim.toLong else 0L
-            val gen = if (fresh) prevGen + 1 else prevGen
-            if (gen != prevGen) writeAtomic(genPath, gen.toString)
-            // Fresh-lineage rule: under combine, a replay from the start
-            // position would add its partials onto the old lineage's, so
-            // the view restarts empty (a consumer re-created at start_seq
-            // -1 then counts only records put after it). Also on a switch
-            // away from combine: partials do not read as newest rows.
-            if (fresh && (combine || wasCombine)) startEmptyDeltaVersion(vname)
-            writeAtomic(viewSchemaPath(vname), aggDf.schema.json)
-            writeViewMeta(vname, mode)
-            // sliding views fold AND reap on the compaction cadence —
-            // standing state stays O(live window), not O(history)
-            val isSw = Files.exists(swMetaPath(vname))
-            val (source, outMode) = mode match {
-              case _: CombinePartials => (df, "append")
-              case _: NewestPerKey => (aggDf, "update")
-              case AppendRows => (aggDf, "append")
-            }
-            source.writeStream.queryName(vname)
-              .outputMode(outMode)
-              .foreachBatch { (batch: DataFrame, batchId: Long) =>
-                val stamped = (gen << 40) | batchId
-                mode match {
-                  case _: NewestPerKey =>
-                    // small files (guide §6): an update-mode batch keeps
-                    // the state-store partitioning
-                    // (spark.sql.shuffle.partitions), so a touched-groups-
-                    // sized delta would land as cores× sliver files PER
-                    // TRIGGER and the merge read pays a footer+task per
-                    // sliver until compaction. Pack the write into at most
-                    // ViewDeltaFiles tasks; coalesce is narrow, so state
-                    // partitions keep their ids and no shuffle is added.
-                    val packed = batch.coalesce(ViewDeltaFiles)
-                    viewLock(vname).synchronized {
-                      packed.withColumn("__batch", lit(stamped))
-                        .write.mode("append").parquet(viewDeltaDir(vname))
-                    }
-                  // Partials and transform rows have no newest-wins merge
-                  // to collapse a replay, so idempotence comes from the
-                  // WRITE: each batch owns a b<stamp> subdir, overwritten
-                  // whole on replay — a retried batch replaces its rows
-                  // instead of adding them twice. Batches already folded
-                  // into a compacted snapshot are skipped outright; the
-                  // check shares the write's lock with the fold's flip, so
-                  // a replay racing a fold sees the new high-water mark.
-                  case _ =>
-                    val rows =
-                      if (combine) v.agg(batch).coalesce(ViewDeltaFiles)
-                      else batch.withColumn("__batch", lit(stamped))
-                    viewLock(vname).synchronized {
-                      if (stamped > foldedThrough(vname))
-                        rows.write.mode("overwrite")
-                          .parquet(s"${viewDeltaDir(vname)}/b$stamped")
-                    }
-                }
-                // output stream (CV-over-CV chaining): forward this
-                // trigger's group updates into the view's derived log as
-                // JSON records — O(touched groups) work, executor-side
-                // staged write (see emitOutputStream). A high-water
-                // mark suppresses re-emission when the batch is replayed
-                // in-lineage; a crash between append and mark, or a
-                // generation bump replaying the backfill, can still
-                // duplicate (the at-least-once floor — see the
-                // createOutputStream scaladoc).
-                if (emitsOutput) {
-                  val hwmPath = Paths.get(metaDir, "views", vname,
-                    "_graft_out_hwm")
-                  val hwm = if (Files.exists(hwmPath))
-                    Files.readString(hwmPath).trim.toLong else Long.MinValue
-                  if (stamped > hwm) {
-                    emitOutputStream(vname, batch, stamped)
-                    writeAtomic(hwmPath, stamped.toString)
-                  }
-                }
-                // online fold: bounds read-time merge cost to
-                // O(groups + autoCompactEvery batch deltas) on a stream
-                // that never stops; sliding views additionally drop
-                // aged-out buckets in the same rewrite. Handed to the
-                // fold thread — this trigger returns without waiting. A
-                // view written in b<stamp> dirs also folds once they reach
-                // Spark's parallel-listing threshold (32 by default): past
-                // it, every read and fold lists them with a Spark job.
-                if (autoCompactEvery > 0 && batchId > 0 &&
-                    (batchId % autoCompactEvery == 0 ||
-                     !mode.isInstanceOf[NewestPerKey] &&
-                       listDir(Paths.get(viewDeltaDir(vname))).count(
-                         _.getFileName.toString.matches("b\\d+")) >=
-                       spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
-                  scheduleFold(vname) {
-                    if (isSw) expireSlidingViewTable(vname)
-                    else compactViewTable(vname)
-                  }
-              }
+        // Three write paths, chosen by viewMode from the analyzed plan
+        // and the view's catalog state (materialize, output stream,
+        // keys=, the path its checkpoint was written by):
+        //  - combiner: the plan is a combinable aggregate (see
+        //    combinerPlan). The query is the parsed stream itself, with
+        //    no state store; each trigger runs the view's aggregate over
+        //    its micro-batch as an ordinary batch plan and writes the
+        //    per-key partials into its own b<stamp> dir. The fold and
+        //    the read combine partials per key. Per-trigger cost is one
+        //    in-batch exchange and the write — no state load/commit.
+        //  - state path: every other aggregate (avg, sketches, HAVING,
+        //    watermarks, custom state behind keys=, output streams,
+        //    which emit each touched group's running value) runs in
+        //    update mode; each trigger appends the touched groups'
+        //    running values, and the newest row per key wins at read.
+        //  - append: a stateless transform, or materialize="append" —
+        //    rows emit once (an append-mode aggregate emits a group
+        //    when the watermark finalizes it; session windows fuse
+        //    across batches, so an update-mode merge would strand
+        //    stale sub-session rows, and Spark rejects the combination
+        //    outright) and land in b<stamp> dirs like partials.
+        val (aggDf, mode) = plans(vname)
+        val emitsOutput = Files.exists(outputStreamPath(vname))
+        val combine = mode.isInstanceOf[CombinePartials]
+        // Generation epoch: deltas are stamped (gen << 40) | batchId.
+        // A query attaching with a FRESH checkpoint (no offsets — e.g.
+        // the consumer was removed and re-created, which deletes its
+        // checkpoints, or the view attached later) restarts batch ids
+        // at 0 and replays the log from the consumer's start position.
+        // Bumping the persisted generation makes every new-lineage
+        // stamp order after every old one: state-path writes win the
+        // newest-per-key merge at once, and the fold high-water mark
+        // stays monotone across lineages. A checkpoint with offsets but
+        // no commits (crashed before the first commit) keeps its
+        // generation — Spark replays the same batch ids, and the
+        // merge/overwrite collapses the replay.
+        val ckpt = Paths.get(metaDir, "checkpoints", c.id.toString, vname)
+        val fresh = maxBatchId(ckpt.resolve("offsets")).isEmpty
+        val prior = Option(viewMetaPath(vname)).filter(Files.exists(_))
+          .map(_ => readViewMeta(vname))
+        val wasCombine = prior.exists(_.isInstanceOf[CombinePartials])
+        Files.createDirectories(Paths.get(metaDir, "views", vname))
+        val genPath = Paths.get(metaDir, "views", vname, "_graft_gen")
+        val prevGen = if (Files.exists(genPath))
+          Files.readString(genPath).trim.toLong else 0L
+        val gen = if (fresh) prevGen + 1 else prevGen
+        if (gen != prevGen) writeAtomic(genPath, gen.toString)
+        // Fresh-lineage rule: under combine, a replay from the start
+        // position would add its partials onto the old lineage's, so
+        // the view restarts empty (a consumer re-created at start_seq
+        // -1 then counts only records put after it). Also on a switch
+        // away from combine: partials do not read as newest rows.
+        if (fresh && (combine || wasCombine)) startEmptyDeltaVersion(vname)
+        writeAtomic(viewSchemaPath(vname), aggDf.schema.json)
+        writeViewMeta(vname, mode)
+        // sliding views fold AND reap on the compaction cadence —
+        // standing state stays O(live window), not O(history)
+        val isSw = Files.exists(swMetaPath(vname))
+        val (source, outMode) = mode match {
+          case _: CombinePartials => (df, "append")
+          case _: NewestPerKey => (aggDf, "update")
+          case AppendRows => (aggDf, "append")
         }
-        writer.option("checkpointLocation",
+        source.writeStream.queryName(vname)
+          .outputMode(outMode)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            val stamped = (gen << 40) | batchId
+            mode match {
+              case _: NewestPerKey =>
+                // small files (guide §6): an update-mode batch keeps
+                // the state-store partitioning
+                // (spark.sql.shuffle.partitions), so a touched-groups-
+                // sized delta would land as cores× sliver files PER
+                // TRIGGER and the merge read pays a footer+task per
+                // sliver until compaction. Pack the write into at most
+                // ViewDeltaFiles tasks; coalesce is narrow, so state
+                // partitions keep their ids and no shuffle is added.
+                val packed = batch.coalesce(ViewDeltaFiles)
+                viewLock(vname).synchronized {
+                  packed.withColumn("__batch", lit(stamped))
+                    .write.mode("append").parquet(viewDeltaDir(vname))
+                }
+              // Partials and transform rows have no newest-wins merge
+              // to collapse a replay, so idempotence comes from the
+              // WRITE: each batch owns a b<stamp> subdir, overwritten
+              // whole on replay — a retried batch replaces its rows
+              // instead of adding them twice. Batches already folded
+              // into a compacted snapshot are skipped outright; the
+              // check shares the write's lock with the fold's flip, so
+              // a replay racing a fold sees the new high-water mark.
+              case _ =>
+                val rows =
+                  if (combine) v.agg(batch).coalesce(ViewDeltaFiles)
+                  else batch.withColumn("__batch", lit(stamped))
+                viewLock(vname).synchronized {
+                  if (stamped > foldedThrough(vname))
+                    rows.write.mode("overwrite")
+                      .parquet(s"${viewDeltaDir(vname)}/b$stamped")
+                }
+            }
+            // output stream (CV-over-CV chaining): forward this
+            // trigger's group updates into the view's derived log as
+            // JSON records — O(touched groups) work, executor-side
+            // staged write (see emitOutputStream). A high-water
+            // mark suppresses re-emission when the batch is replayed
+            // in-lineage; a crash between append and mark, or a
+            // generation bump replaying the backfill, can still
+            // duplicate (the at-least-once floor — see the
+            // createOutputStream scaladoc).
+            if (emitsOutput) {
+              val hwmPath = Paths.get(metaDir, "views", vname,
+                "_graft_out_hwm")
+              val hwm = if (Files.exists(hwmPath))
+                Files.readString(hwmPath).trim.toLong else Long.MinValue
+              if (stamped > hwm) {
+                emitOutputStream(vname, batch, stamped)
+                writeAtomic(hwmPath, stamped.toString)
+              }
+            }
+            // online fold: bounds read-time merge cost to
+            // O(groups + autoCompactEvery batch deltas) on a stream
+            // that never stops; sliding views additionally drop
+            // aged-out buckets in the same rewrite. Handed to the
+            // fold thread — this trigger returns without waiting. A
+            // view written in b<stamp> dirs also folds once they reach
+            // Spark's parallel-listing threshold (32 by default): past
+            // it, every read and fold lists them with a Spark job.
+            if (autoCompactEvery > 0 && batchId > 0 &&
+                (batchId % autoCompactEvery == 0 ||
+                 !mode.isInstanceOf[NewestPerKey] &&
+                   listDir(Paths.get(viewDeltaDir(vname))).count(
+                     _.getFileName.toString.matches("b\\d+")) >=
+                   spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
+              scheduleFold(vname) {
+                if (isSw) expireSlidingViewTable(vname)
+                else compactViewTable(vname)
+              }
+          }
+          .option("checkpointLocation",
             s"$metaDir/checkpoints/${c.id}/$vname")
           .pipe(w => effTrig.fold(w)(w.trigger))
           .start()
@@ -2355,18 +2202,6 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   }
 
   // --- observability (seqnums view, README.md:119-126) --------------------
-
-  /** List a directory's entries, closing the underlying stream
-    * (`Files.list` holds a file handle until closed — leaked handles
-    * accumulate under repeated polling). */
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!Files.exists(p)) Nil
-    else {
-      val s = Files.list(p)
-      try { val it = s.iterator(); val b = Seq.newBuilder[java.nio.file.Path]
-            while (it.hasNext) b += it.next(); b.result() }
-      finally s.close()
-    }
 
   /** Highest batch id recorded in a checkpoint subdirectory (offsets/ or
     * commits/ — files are named by batch id). */

@@ -958,11 +958,30 @@ class EngineScaleSpec extends SparkSpec {
       eng.expireStreamTable("flat_stream", "1 HOUR"))
     assert(e.getMessage.contains("compactStreamTable"),
       "partition-based expiry over a layout with no partitions would " +
-        "silently drop every row — it must refuse with the migration step")
+        "silently never expire a row — it must refuse with the migration step")
+    // the flat table gains a date partition; folding that partition
+    // carries the flat file into the next version
+    def flat(dir: String) = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq
+    val flatFiles = flat(eng.tableDataDir("flat_stream"))
+    Seq(("y", new java.sql.Timestamp(System.currentTimeMillis())))
+      .toDF("payload", "arrival_timestamp")
+      .withColumn("__arrival_date", to_date(col("arrival_timestamp")))
+      .coalesce(1).write.partitionBy("__arrival_date").mode("append")
+      .parquet(eng.tableDataDir("flat_stream"))
+    val before = eng.tableDataDir("flat_stream")
+    val date = new java.io.File(before).listFiles().map(_.getName)
+      .find(_.startsWith("__arrival_date=")).get.stripPrefix("__arrival_date=")
+    eng.compactStreamTablePartition("flat_stream", date, targetPartitions = 1)
+    assert(eng.tableDataDir("flat_stream") !== before, "the partition folded")
+    assert(flat(eng.tableDataDir("flat_stream")) === flatFiles,
+      "the partition fold carries the flat file")
     // the documented migration: one compaction rewrites partitioned
     eng.compactStreamTable("flat_stream", targetPartitions = 1)
+    assert(flat(eng.tableDataDir("flat_stream")).isEmpty)
     eng.expireStreamTable("flat_stream", "1 HOUR")
-    assert(eng.streamTable("flat_stream").count() === 1L)
+    assert(eng.streamTable("flat_stream").collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("x", "y"))
   }
 
   test("DEACTIVATE pauses one view; ACTIVATE resumes it and catches up losslessly") {

@@ -226,14 +226,6 @@ class SqlFrontendSpec extends SparkSpec {
     assert(e.getMessage.contains("watermark") &&
            e.getMessage.contains("session_window"),
       s"expected a descriptive front-end error, got: ${e.getMessage}")
-    // memory materialization runs complete-mode snapshots — no watermark
-    // needed, so the same SQL is legal there
-    eng.createContinuousViewSql("sessbad_mem", "sessbad_stream",
-      "SELECT session_window(cast(ts AS timestamp), '30 seconds') AS w, " +
-        "count(*) AS n FROM sessbad_stream " +
-        "GROUP BY session_window(cast(ts AS timestamp), '30 seconds')",
-      materialize = "memory")
-    eng.dropView("sessbad_mem")
   }
 
   test("pipeline_kinesis.views lists the CV catalog in SQL") {

@@ -116,47 +116,47 @@ class StreamingSpec extends SparkSpec {
     eng.createStream("typed_stream", StructType(Seq(
       StructField("name", StringType), StructField("n", LongType),
       StructField("x", DoubleType))))
-    // memory materialization exercised here: the opt-in demo sink
     eng.createContinuousView("typed_view", "typed_stream",
-      df => df.groupBy("name").agg(sum("n").as("sn"), sum("x").as("sx")),
-      materialize = "memory")
+      df => df.groupBy("name").agg(sum("n").as("sn"), sum("x").as("sx")))
     eng.consumeBegin("ep", "s", "typed_stream", format = "csv", delimiter = ",")
     eng.processAllAvailable()
-    val rows = spark.table("typed_view").orderBy("name").collect()
+    val rows = eng.viewTable("typed_view").orderBy("name").collect()
     assert(rows.map(_.getString(0)).toSeq === Seq("a", "b"))
     assert(rows.map(_.getLong(1)).toSeq === Seq(1L, 2L))
     assert(rows.map(_.getDouble(2)).toSeq === Seq(9.5, 0.25))
     eng.consumeEndAll()
   }
 
-  test("memory views snapshot into executor cache, not a driver memory sink") {
+  test("a legacy memory view loads from the catalog; consumeBegin refuses it and starts nothing") {
     val root = tmpDir("kin-mem"); val meta = tmpDir("kin-mem-meta")
-    ShardedLog.append(s"$root/s", 0, Seq(("a", "x"), ("b", "y"), ("c", "x")))
+    ShardedLog.append(s"$root/s", 0, Seq(("a", "x")))
     val eng = new KinesisEngine(spark, meta)
     eng.addEndpoint("ep", "r", url = root)
     eng.createStream("mem_stream", StructType(Seq(StructField("payload", StringType))))
-    eng.createContinuousView("mem_view", "mem_stream",
-      _.groupBy("payload").count(), materialize = "memory")
-    eng.consumeBegin("ep", "s", "mem_stream")
-    eng.processAllAvailable()
-    assert(spark.table("mem_view").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap === Map("x" -> 2L, "y" -> 1L))
-    // the snapshot is block-manager cached (distributed, spillable) — a
-    // plan over InMemoryRelation, not the driver-resident memory sink's
-    // LocalTableScan
-    val plan = spark.table("mem_view").queryExecution.optimizedPlan.toString
-    assert(plan.contains("InMemoryRelation"),
-      s"expected a cached distributed snapshot, got:\n$plan")
-    assert(!plan.contains("LocalTableScan"), "no driver-local result table")
-    // the next trigger swaps in a fresh snapshot
-    ShardedLog.append(s"$root/s", 0, Seq(("d", "y")))
-    eng.processAllAvailable()
-    assert(spark.table("mem_view").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap === Map("x" -> 2L, "y" -> 2L))
-    eng.consumeEndAll()
-    eng.dropView("mem_view")
-    assert(!spark.catalog.tableExists("mem_view"),
-      "dropView releases the snapshot and its table registrations")
+    eng.createContinuousViewSql("mem_view", "mem_stream",
+      "SELECT payload, count(*) AS n FROM mem_stream GROUP BY payload")
+    // the row an older build wrote for materialize = "memory"
+    val tsv = java.nio.file.Paths.get(meta, "views.tsv")
+    val b64 = java.util.Base64.getEncoder
+    java.nio.file.Files.writeString(tsv, java.nio.file.Files.readString(tsv)
+      .replace(b64.encodeToString("parquet".getBytes("UTF-8")),
+        b64.encodeToString("memory".getBytes("UTF-8"))))
+    val legacy = new KinesisEngine(spark, meta)
+    assert(legacy.listViews === Seq("mem_view"), "the legacy row still loads")
+    val e = intercept[IllegalStateException](
+      legacy.consumeBegin("ep", "s", "mem_stream"))
+    assert(e.getMessage.contains("Drop and re-create"), e.getMessage)
+    assert(legacy.activeQueries.isEmpty &&
+      !spark.streams.active.exists(_.name.startsWith("mem_stream__table__")),
+      "nothing was started for the refused consumer")
+    legacy.dropView("mem_view")
+    legacy.createContinuousViewSql("mem_view", "mem_stream",
+      "SELECT payload, count(*) AS n FROM mem_stream GROUP BY payload")
+    legacy.consumeBegin("ep", "s", "mem_stream")
+    legacy.processAllAvailable()
+    assert(legacy.viewTable("mem_view").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap === Map("x" -> 1L))
+    legacy.consumeEndAll()
   }
 
   test("json format parses records against the stream schema") {
@@ -237,15 +237,14 @@ class StreamingSpec extends SparkSpec {
     val eng = new KinesisEngine(spark, meta)
     eng.addEndpoint("ep", "r", url = root)
     eng.createStream("ss_stream", StructType(Seq(StructField("payload", StringType))))
-    eng.createContinuousView("ss_view", "ss_stream", _.groupBy().count(),
-      materialize = "memory") // queried before any batch may have run
+    eng.createContinuousView("ss_view", "ss_stream", _.groupBy().count())
     eng.consumeBegin("ep", "s", "ss_stream", startSeq = -1L) // latest
     eng.processAllAvailable()
-    val before = spark.table("ss_view").collect()
+    val before = eng.viewTable("ss_view").collect() // maybe before any batch ran
     assert(before.isEmpty || before.head.getLong(0) === 0L, "latest skips backlog")
     ShardedLog.append(s"$root/s", 0, (1 to 5).map(i => (s"k$i", s"new$i")))
     eng.processAllAvailable()
-    assert(spark.table("ss_view").head().getLong(0) === 5L)
+    assert(eng.viewTable("ss_view").head().getLong(0) === 5L)
     eng.consumeEndAll()
 
     val eng2 = new KinesisEngine(spark, tmpDir("kin-ss-meta2"))
