@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured ANN recall/latency ladder (README "Design for scale" §ANN):
   * per-rung wall-clock and recall@10 against the exact scan, on the SF
   * dir in arg 0 (default sf0.1). Methodology mirrors Bench: min of 3
@@ -17,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object AnnLadder {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // rung → README description (order = the ladder, cheap-to-exact)
     val rungs = Seq(

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for a set of declared queries into a
@@ -10,9 +9,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * (plans/rNN/<query>_{before,after}.txt). Usage:
   *   runMain graft.PlanSnap <outDir> <suffix> [q1,q2,...]
   * Defaults: sf dir from SPARK_GRAFT_SF_DIR (sf0.1), all queries when no
-  * list is given. Session config mirrors Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) so the captured plans are the ones the
-  * bench actually runs, not PlanDump's local[8] audit shape.
+  * list is given. Runs under Bench's session ([[Session.local]]:
+  * local[$SPARK_GRAFT_CPUS], default 4), so the captured plans are the
+  * ones the bench actually runs, not PlanDump's local[8] audit shape.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -21,15 +20,7 @@ object PlanSnap {
     val names = args.lift(2).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

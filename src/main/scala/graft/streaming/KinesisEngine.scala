@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.util.chaining._
 
 import graft.Fs.{listDir, rmTree, writeAtomic}
+import graft.Json
 import graft.sources.ShardedLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EvalMode, ExprId, NamedExpression}
@@ -1895,17 +1896,6 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     Seq(v).toDF("result")
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
-      case ch => ch.toString
-    } + "\""
-
   /** PipelineDB's `INSERT INTO stream VALUES …` idiom. PipelineDB streams
     * are in-database buses; here data enters through the shard log, so
     * the INSERT routes through a bound consumer: rows serialize in that
@@ -1948,7 +1938,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         else if (m.group(2) != null) (m.group(2), m.group(2))
         else if (m.group(4) != null)
           (m.group(4).toLowerCase, m.group(4).toLowerCase)
-        else { val v = m.group(1).replace("''", "'"); (v, jsonStr(v)) }
+        else { val v = m.group(1).replace("''", "'"); (v, Json.str(v)) }
       }.toSeq
       require(toks.size == cols.size,
         s"INSERT row ($r): ${toks.size} values for ${cols.size} columns")
@@ -1970,7 +1960,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
           }
           slotS.map(v => Option(v).getOrElse("")).mkString(c.delimiter)
         case "json" => schema.fieldNames.zip(slotJ)
-          .map { case (n, v) => jsonStr(n) + ":" + v }.mkString("{", ",", "}")
+          .map { case (n, v) => Json.str(n) + ":" + v }.mkString("{", ",", "}")
         case other => throw new IllegalArgumentException(
           s"INSERT INTO a '$other'-format stream is not supported")
       }

@@ -2,267 +2,36 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Synthetic-load test of the prior-round band guard (r14 advice #1):
-  * BENCH_r14 archived q_text_quality at 1,340 ms (true time 182 ms)
-  * because EVERY sample in the measurement window was inflated together —
-  * min-of-3 cannot help when the contamination is sustained. The guard
-  * compares against the previous round's archived queries_ms, the one
-  * reference ambient load can't touch. No Spark session needed: the
-  * guard is pure decision logic over (measured min, prior ms).
+/** Synthetic-load tests of the band guard and the drift ratios, and
+  * of the prior they read. BENCH_r14 once recorded q_text_quality at
+  * 1,340 ms (true time 182 ms) because EVERY sample in the measurement
+  * window was inflated together — min-of-3 cannot help when the
+  * contamination is sustained. The guard compares against the committed
+  * prior, the one reference ambient load can't touch. No Spark session
+  * needed: the guard is pure decision logic over (measured min, prior ms).
   */
 class BenchGuardSpec extends AnyFunSuite {
 
-  test("parsePriorQueriesMs reads integer-ms pairs out of an escaped artifact tail") {
-    // shape of a real BENCH_r{N}.json: metadata + the run's stdout tail
-    // as ONE escaped JSON string, containing (possibly truncated)
-    // iter_spread arrays, the full-precision seconds line, queries_ms,
-    // and the trailer
-    val artifact =
-      """{
-        |  "n": 14, "rc": 0, "cpus": 32, "sf": 0.1,
-        |  "tail": "spread_ms\",\"queries\":{\"q_topk\":[80,95],\"q_scan_parquet\":[52,60]}}\n{\"metric\":\"total\",\"value\":27.85,\"unit\":\"sec\",\"queries\":{\"q_topk\":0.080123,\"q_scan_parquet\":0.0529}}\n{\"metric\":\"queries_ms\",\"unit\":\"ms\",\"queries\":{\"q_topk\":80,\"q_scan_parquet\":52,\"q_text_quality\":1340,\"q_dedup_ngram\":2486}}\n{\"metric\":\"total_summary\",\"total_s\":27.85,\"n_queries\":97}"
-        |}""".stripMargin
-    val prior = BenchGuards.parsePriorQueriesMs(artifact)
-    assert(prior === Map(
-      "q_topk" -> 80L, "q_scan_parquet" -> 52L,
-      "q_text_quality" -> 1340L, "q_dedup_ngram" -> 2486L))
-    // iter-spread arrays and the fractional-seconds line must NOT leak in
-    // as bogus priors (the regex's int+terminator shape excludes both) —
-    // q_topk resolving to 80 (queries_ms), not 0 (truncated float) or
-    // 80-from-array, is the witness
+  test("the prior reader takes only int-ms pairs") {
+    // a saved Bench log: the total line's fractional seconds, the
+    // iter_spread_ms arrays and band_suspects must not leak in as priors;
+    // the queries_ms_plain line is the whole prior
+    val log = Seq(
+      """[info] {"metric":"total","value":27.85,"unit":"sec","queries":{"q_topk":0.080123,"q_scan_parquet":0.0529,"q_stale":1.5},"errors":{},"sf":"/data/sf0.1"}""",
+      """[info] {"metric":"iter_spread_ms","queries":{"q_topk":[80,95],"q_scan_parquet":[52,60],"q_stale":[1500,1510]}}""",
+      """[info] {"metric":"band_suspects","queries":{"q_stale":{"ms":1500,"prior_ms":95}}}""",
+      """[info] {"metric":"queries_ms_plain","ms":{"q_topk":80,"q_scan_parquet":52,"q_text_quality":1340},"n":3}""",
+      """[info] {"metric":"summary","t_s":27.850,"n_q":3,"n_err":0,"n_su":1,"n_pr":3}""")
+      .mkString("\n")
+    assert(BenchGuards.parsePriorQueriesMs(log) === Map(
+      "q_topk" -> 80L, "q_scan_parquet" -> 52L, "q_text_quality" -> 1340L))
   }
 
-  test("grouped encoding round-trips, including bare-family and single-entry names") {
-    val ms = Map(
-      "q_dedup" -> 55L, "q_dedup_exact" -> 12L, "q_dedup_minhash" -> 34L,
-      "q_cond_agg" -> 202L, "q_topk" -> 80L,
-      "q_similarity_ivfpq_nprobe" -> 313L, "q_similarity_ivfpq" -> 280L)
-    val enc = BenchGuards.encodeGrouped(ms)
-    assert(BenchGuards.decodeGrouped(enc) === ms)
-    // multi-entry families brace once; singles stay flat
-    assert(enc.contains("dedup{.:55,exact:12,minhash:34}"))
-    assert(enc.contains("cond_agg:202"))
-    assert(enc.contains("topk:80"))
-    // base-36 (the g36 artifact marker's radix) round-trips the same map
-    // with strictly fewer digit bytes
-    val enc36 = BenchGuards.encodeGrouped(ms, radix = 36)
-    assert(BenchGuards.decodeGrouped(enc36, radix = 36) === ms)
-    assert(enc36.contains("cond_agg:5m") && enc36.contains("topk:28"))
-    assert(enc36.length < enc.length)
-  }
-
-  test("full declared inventory + trailers fit the driver's 2000-char tail window") {
-    // BENCH_r15 head-truncated 27 of 102 per-query entries because the
-    // flat map outgrew the driver's ~2000-char stdout tail capture (r15
-    // verdict #1). This test replays Bench's EXACT tail-zone lines over
-    // the REAL declared query inventory — PROJECTED to 125 queries
-    // (VERDICT r17 #2: the next ~5 additions must already fit) — takes
-    // the last 2000 chars the way the driver does, and requires every
-    // entry to survive — so any future query addition that would
-    // overflow the window fails HERE, not in the next round's artifact.
-    // the projection target TRACKS the inventory (+5) so the lookahead
-    // margin never silently degrades to zero as queries land (review r18);
-    // the absolute floor stays — a drastically shrunken inventory (bad
-    // merge dropping a family) must not silently replay a small window
-    assert(SparkEntry.queries.size >= 100, "inventory floor sanity")
-    val pad = (1 to 5).map(i => s"q_similarity_projected_pad$i")
-    val names = (SparkEntry.queries.keys.toSeq ++ pad).sorted
-    assert(names.size === SparkEntry.queries.size + 5,
-      "inventory projection sanity")
-    // worst-ish-case digits: mostly 3-4 digit ms values
-    val ms = names.zipWithIndex.map { case (n, i) => n -> (100L + (i * 37) % 1900) }
-    val grpLine =
-      s"""{"metric":"queries_ms","g36":"${BenchGuards.encodeGrouped(ms, radix = 36)}","n":${ms.size}}"""
-    val summary =
-      """{"metric":"summary","t_s":29.745,"n_q":102,"n_err":0,"n_su":0,"n_pr":102,"sm":0.077,"s9":0.243,"cvp":1.148,"nc":75,"fcv":"D:1.07,J:0.98,S:1.01,W:1.00,agg:1.02,text:0.99","rps":18290.7}"""
-    // the r17 spread_pct line rides ABOVE queries_ms: sacrificial under
-    // truncation, and its grouped percents must never parse as ms priors
-    // — its payload key is "sp", so no cut can leave a `"grp":"` marker
-    val spct = names.zipWithIndex.map { case (n, i) => n -> ((i * 7) % 250).toLong }
-    val spctLine =
-      s"""{"metric":"spread_pct","sp":"${BenchGuards.encodeGrouped(spct, radix = 36)}","n":${spct.size}}"""
-    val sbtNoise = "[success] Total time: 182 s (03:02), completed Aug 14, 2026, 12:51:47 PM"
-    // a suspect-HEAVY round: the band_suspects line prints BEFORE the
-    // grp line (review r16 — it must be the sacrificial content, never
-    // the per-query entries), so even a fat suspects payload cannot
-    // evict queries_ms entries from the window
-    val suspects = "[info] " + ("""{"metric":"band_suspects","queries":{""" +
-      names.take(5).map(n => s""""$n":{"ms":1340,"prior_ms":95}""").mkString(",") + "}}")
-    // sbt prefixes every stdout line with "[info] "
-    val stdout = Seq(
-      "[info] " + """{"metric":"ingest_throughput","records":20000,"rec_per_s":18290.7,"seed_s":0.007,"setup_s":0.001,"drain_s":1.093,"stop_s":0.220}""",
-      suspects,
-      "[info] " + spctLine,
-      "[info] " + grpLine,
-      "[info] " + summary,
-      sbtNoise).mkString("\n")
-    val tail = stdout.takeRight(2000)
-    // the artifact embeds the tail as an escaped JSON string
-    val artifact = s"""{"n": 16, "rc": 0, "tail": "${tail.replace("\"", "\\\"")}"}"""
-    val recovered = BenchGuards.parsePriorQueriesMs(artifact)
-    assert(recovered === ms.toMap,
-      s"window must preserve all ${ms.size} entries; got ${recovered.size}" +
-        " (a spread_pct percent leaking in as an ms prior would also fail here)")
-    // headroom so the NEXT few queries don't silently overflow. The HARD
-    // 2000-byte guarantee is the recovery assert above (it replays the
-    // exact window); this line is ADVANCE notice only — it fired at the
-    // 113th query, the "unit" key was reclaimed, and the notice line
-    // moved to 1950 (~3 queries of warning before the real ceiling).
-    val zone = Seq("[info] " + grpLine, "[info] " + summary, sbtNoise)
-      .mkString("\n").length
-    assert(zone <= 1950, s"tail-zone bytes $zone exceed the 1950 headroom line")
-  }
-
-  test("parsePriorQueriesMs merges grouped (r16+) and flat (r15-era) artifact shapes") {
-    val artifact =
-      """{"n": 16, "tail": "{\"metric\":\"queries_ms\",\"unit\":\"ms\",\"queries\":{\"q_topk\":80}}\n{\"metric\":\"queries_ms\",\"unit\":\"ms\",\"grp\":\"dedup{exact:12},cond_agg:202\",\"n\":2}"}"""
-    assert(BenchGuards.parsePriorQueriesMs(artifact) ===
-      Map("q_topk" -> 80L, "q_dedup_exact" -> 12L, "q_cond_agg" -> 202L))
-  }
-
-  test("decodeGrouped skips a truncation-mangled leading fragment") {
-    // a head-cut window can open mid-group: orphan subs before the first
-    // complete structure must not crash or mis-assign
-    val cut = "t_group:123,distinct:45},argmax:77,dedup{exact:12}"
-    val got = BenchGuards.decodeGrouped(cut)
-    assert(got.get("q_argmax").contains(77L))
-    assert(got.get("q_dedup_exact").contains(12L))
-    assert(!got.contains("q_distinct"), "orphan brace fragment must not parse")
-  }
-
-  test("decodeGrouped with headIntact=false rejects a head-cut flat pair (ADVICE r16 #3)") {
-    // '…ty_batch:313' — the head cut ate 'q_similari'; the remnant still
-    // parses as a well-formed pair, so only the caller's headIntact flag
-    // can reject it
-    val cut = "ty_batch:313,cond_agg:202,dedup{exact:12}"
-    val loose = BenchGuards.decodeGrouped(cut, headIntact = false)
-    assert(!loose.contains("q_ty_batch"), "head-cut pair must be dropped")
-    assert(loose === Map("q_cond_agg" -> 202L, "q_dedup_exact" -> 12L))
-    // the default (intact head) keeps byte-identical behavior
-    assert(BenchGuards.decodeGrouped(cut).get("q_ty_batch").contains(313L))
-    // a GROUP at position 0 is equally unverifiable: 'ity{…}' from a cut
-    // 'similarity{…}' must not parse under the bogus q_ity_* family
-    // (review r17 — the first hardening only covered flat pairs)
-    val cutGrp = "ity{batch:313,ivfpq:42},cond_agg:202"
-    val looseGrp = BenchGuards.decodeGrouped(cutGrp, headIntact = false)
-    assert(looseGrp === Map("q_cond_agg" -> 202L),
-      "head-cut group fragment must be dropped whole")
-    assert(BenchGuards.decodeGrouped(cutGrp).contains("q_ity_batch"),
-      "default intact-head keeps it (the caller vouches for the head)")
-    // only the POSITION-0 structure is dropped: the flat head goes, the
-    // non-head group survives
-    assert(BenchGuards.decodeGrouped("topk:80,dedup{exact:12}", headIntact = false)
-      === Map("q_dedup_exact" -> 12L))
-    // a cut inside a group BODY leaves bare interior pairs then '}' —
-    // they must not decode as bogus top-level families (review r17 #2):
-    // everything through the orphaned '}' goes, the rest is boundary-clean
-    val cutBody = "3,ivfpq:42,lsh_multi:97,topk:95},cond_agg:202,dedup{exact:12}"
-    assert(BenchGuards.decodeGrouped(cutBody, headIntact = false)
-      === Map("q_cond_agg" -> 202L, "q_dedup_exact" -> 12L),
-      "orphaned group-body pairs must be dropped whole")
-    // a cut landing EXACTLY on a group's '{' leaves a NAMELESS orphan
-    // group (review r18): grpRe never matches it, so without stripping
-    // through its '}' the interior pairs would leak into the flat pass —
-    // and a leaked sub name can ALIAS a real flat query (the inventory
-    // has both q_sketch_topk and q_topk)
-    val cutOnBrace = "{bloom:5,cms:7,topk:3},cond_agg:202,dedup{exact:12}"
-    assert(BenchGuards.decodeGrouped(cutOnBrace, headIntact = false)
-      === Map("q_cond_agg" -> 202L, "q_dedup_exact" -> 12L),
-      "nameless orphan group must be dropped whole, not leak q_cms/q_topk")
-  }
-
-  test("priors survive a cut inside the queries_ms metric prefix; spread_pct can't pollute") {
-    // window starts INSIDE '{"metric":"queries_ms' — the bare "grp" anchor
-    // still recovers every entry (an anchor on the full metric literal
-    // would lose the whole map, review r17). The spread_pct line ahead of
-    // it was fully cut except its tail — its "sp" payload key leaves no
-    // "grp" marker, so its percents can never masquerade as ms priors.
-    val artifact =
-      """{"n": 17, "tail": "ct\",\"sp\":\"dedup{exact:7,minhash:3},topk:2\",\"n\":3}\n{\"metric\":\"queries_ms\",\"grp\":\"dedup{exact:12,minhash:34},topk:80\",\"n\":3}\n{\"metric\":\"total_summary\",\"total_s\":1.0}"""" + "}"
-    val cutHead = artifact.replace("""{\"metric\":\"queries_ms\",""", """ms\",""")
-    assert(BenchGuards.parsePriorQueriesMs(cutHead) ===
-      Map("q_dedup_exact" -> 12L, "q_dedup_minhash" -> 34L, "q_topk" -> 80L),
-      "every ms entry recovered; no spread percent leaked")
-  }
-
-  test("token dictionary engages at radix 36, round-trips, leaves old payloads intact") {
-    // r18 zone reclaim (VERDICT r17 #2): the 120-query tail zone was 90
-    // bytes from the tripwire; name tokens encode as uppercase letters
-    // under the g36 setting and decode expands them unconditionally
-    val ms = Map(
-      "q_similarity_ivfpq_rindexed" -> 648L, "q_similarity_lsh_multi" -> 97L,
-      "q_dedup_spans_indexed" -> 120L, "q_dedup_exact" -> 12L,
-      "q_split_contam_audit" -> 2847L, "q_split_leakfree" -> 2134L,
-      "q_window_frame" -> 55L, "q_json_funcs" -> 40L, "q_topk" -> 80L)
-    val enc36 = BenchGuards.encodeGrouped(ms, radix = 36)
-    // family AND sub tokens compress; non-dict tokens pass through;
-    // single-entry families print flat with the same token coding
-    assert(enc36.contains("S{"), "similarity family must encode as S")
-    assert(enc36.contains("Q_rindexed"), "ivfpq sub-token must encode as Q")
-    assert(enc36.contains("Z_X:"), "spans + indexed sub-tokens (r18b dict)")
-    assert(enc36.contains("P{C_A:"), "split family + contam/audit tokens")
-    assert(enc36.contains("W_frame:") && enc36.contains("json_F:"),
-      "flat single-entry names token-compress too")
-    assert(enc36.contains("topk:"), "plain names stay plain")
-    assert(BenchGuards.decodeGrouped(enc36, radix = 36) === ms)
-    // radix 10 (the r16 `grp` marker's setting) stays dictionary-free so
-    // archived decimal payloads remain byte-comparable
-    val enc10 = BenchGuards.encodeGrouped(ms)
-    assert(enc10.contains("similarity{") && !enc10.contains("S{"))
-    assert(BenchGuards.decodeGrouped(enc10) === ms)
-    // pre-r18 base-36 payload (no uppercase anywhere) decodes unchanged
-    assert(BenchGuards.decodeGrouped("dedup{exact:c,minhash:y},topk:28", radix = 36)
-      === Map("q_dedup_exact" -> 12L, "q_dedup_minhash" -> 34L, "q_topk" -> 80L))
-    // the dictionary must be append-only with unique UPPERCASE codes —
-    // 1-2 letters since r19 (the single alphabet ran out at H/I); every
-    // char uppercase keeps codes disjoint from plain all-lowercase tokens
-    // and from base-36 values
-    val codes = BenchGuards.tokenDict.map(_._2)
-    assert(codes.distinct === codes)
-    assert(codes.forall(c => c.nonEmpty && c.length <= 2 && c.forall(_.isUpper)))
-    assert(BenchGuards.tokenDict.map(_._1).distinct.size === codes.size)
-  }
-
-  test("r19 dictionary tokens: 2-letter codes round-trip; ordering is by RAW name (ADVICE r18 #3)") {
-    val ms = Map(
-      "q_media_phash_pairs" -> 412L, "q_media_audiofp" -> 88L,
-      "q_media_decode" -> 301L, "q_dedup_minhash_bucketed" -> 530L,
-      "q_vocab_coverage" -> 99L, "q_vocab_train" -> 800L,
-      "q_aaa_zeta" -> 7L)
-    val enc36 = BenchGuards.encodeGrouped(ms, radix = 36)
-    assert(enc36.contains("HA{"), "media family must encode as HA")
-    assert(enc36.contains("HB_HC:"), "phash_pairs must encode as HB_HC")
-    assert(enc36.contains("HD:"), "audiofp must encode as HD")
-    assert(enc36.contains("H_I:"), "minhash_bucketed must encode as H_I")
-    assert(enc36.contains("HF{"), "vocab family must encode as HF")
-    assert(BenchGuards.decodeGrouped(enc36, radix = 36) === ms)
-    // raw-name ordering: q_aaa_zeta sorts FIRST even though its encoded
-    // name ('aaa_zeta', lowercase) would sort after the uppercase codes —
-    // the r18 encoded-name sort would have put media/dedup groups first
-    assert(enc36.startsWith("aaa_zeta:7,"),
-      s"families must sort by raw name, got: ${enc36.take(40)}")
-    // subs inside a group sort raw too: audiofp < decode < phash
-    val mediaGrp = enc36.substring(enc36.indexOf("HA{"))
-    assert(mediaGrp.indexOf("HD:") < mediaGrp.indexOf("HG:") &&
-           mediaGrp.indexOf("HG:") < mediaGrp.indexOf("HB_HC:"),
-      s"sub ordering must follow raw names: $mediaGrp")
-  }
-
-  test("gen_atlas.py's TOKEN_DICT mirror matches BenchGuards.tokenDict exactly (r20)") {
-    // The atlas generator carries a Python mirror of the dictionary so it
-    // can label archived bench payloads; if the two drift, the README
-    // atlas silently mislabels codes. Parse the mirror out of the script
-    // and require exact equality (same pairs, and — because both sides
-    // are append-only — the same count).
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("tools/gen_atlas.py")), "UTF-8")
-    val body = src.substring(src.indexOf("TOKEN_DICT = {"),
-                             src.indexOf("}", src.indexOf("TOKEN_DICT = {")))
-    val mirror = """"([a-z]+)": "([A-Z]{1,2})"""".r
-      .findAllMatchIn(body).map(m => m.group(1) -> m.group(2)).toMap
-    assert(mirror === BenchGuards.tokenDict.toMap,
-      s"atlas mirror drifted: only-python=${mirror.toSet -- BenchGuards.tokenDict.toSet}, " +
-        s"only-scala=${BenchGuards.tokenDict.toSet -- mirror.toSet}")
+  test("the committed BENCH_PRIOR.json has one entry > 0 for every SparkEntry.queries key") {
+    val prior = BenchGuards.parsePriorQueriesMs(
+      java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_PRIOR.json")))
+    assert(prior.keySet === SparkEntry.queries.keySet)
+    assert(prior.values.forall(_ > 0), prior.filter(_._2 <= 0))
   }
 
   test("famCvp localizes drift to families with enough common queries") {
@@ -276,36 +45,6 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(math.abs(byFam("dedup") - 1.5) < 1e-9)
     assert(math.abs(byFam("join") - 1.0) < 1e-9)
     assert(fams.find(_._1 == "dedup").get._3 === 8, "0-ms prior key excluded from count")
-  }
-
-  test("cvp prior excludes the in-flight round's own artifact (ADVICE r17 #2)") {
-    // inFlightRound parses the verdict header: building round = judged + 1
-    val dir = java.nio.file.Files.createTempDirectory("bench_guard_spec")
-    val verdict = dir.resolve("VERDICT.md")
-    java.nio.file.Files.write(verdict, "# VERDICT — round 17\n\nbody".getBytes)
-    assert(BenchGuards.inFlightRound(verdict.toString) === Some(18))
-    assert(BenchGuards.inFlightRound(dir.resolve("missing.md").toString) === None)
-    // anchored header (ADVICE r18 #4): an unrelated markdown file whose
-    // early prose mentions "round 5" must not select a prior artifact
-    val unrelated = dir.resolve("README_scratch.md")
-    java.nio.file.Files.write(unrelated,
-      "# Scratch notes\nthis round 5 experiment\n".getBytes)
-    assert(BenchGuards.inFlightRound(unrelated.toString) === None,
-      "non-VERDICT header must not parse as an in-flight round")
-    // newestArtifacts(below = in-flight) skips the same-round recording:
-    // a rehearsal rerun after BENCH_r18.json lands must band drift
-    // against r17, not against round 18's own earlier artifact
-    Seq(16, 17, 18).foreach { r =>
-      java.nio.file.Files.write(dir.resolve(s"BENCH_r$r.json"), "{}".getBytes)
-    }
-    def base(ps: Seq[String]) = ps.map(p => new java.io.File(p).getName)
-    assert(base(BenchGuards.newestArtifacts(1, below = Some(18), dir = dir.toString))
-      === Seq("BENCH_r17.json"))
-    assert(base(BenchGuards.newestArtifacts(1, below = None, dir = dir.toString))
-      === Seq("BENCH_r18.json"))
-    assert(base(BenchGuards.newestArtifacts(2, below = Some(18), dir = dir.toString))
-      === Seq("BENCH_r17.json", "BENCH_r16.json"))
-    dir.toFile.listFiles.foreach(_.delete()); dir.toFile.delete()
   }
 
   test("commonVsPrior: broad sub-3x drift is visible; disjoint or zero priors are not") {
@@ -336,17 +75,6 @@ class BenchGuardSpec extends AnyFunSuite {
     // ...but a genuinely heavy query 3x out IS flagged
     assert(outOfBand(minSec = 7.2, priorMs = 1800),
       "the r10 q_dedup_ngram shape (7.2 s vs 1.8 s band) must be flagged")
-  }
-
-  test("mergeMin: per-query min across prior artifacts keeps the clean recording in play") {
-    // the default reference is min over the TWO newest archives: if the
-    // newest one recorded a contamination-inflated time, the older clean
-    // number still bands the next run
-    val newest = Map("q_a" -> 1340L, "q_b" -> 500L, "q_new" -> 90L)
-    val older = Map("q_a" -> 95L, "q_b" -> 520L)
-    val merged = BenchGuards.mergeMin(Seq(newest, older))
-    assert(merged === Map("q_a" -> 95L, "q_b" -> 500L, "q_new" -> 90L))
-    assert(BenchGuards.mergeMin(Nil) === Map.empty)
   }
 
   test("simulated bench window: only the sustained-inflation query is flagged") {

@@ -4,11 +4,12 @@ import graft.sources.ShardedLog
 import graft.streaming.KinesisEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Gen, Prop, Shrink, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 /** Model-based restart property of the view engine. Seeded, shrinkable
-  * random sequences of engine operations — put, consume to quiescence,
+  * random sequences, each under its own fold cadence, of engine
+  * operations — put, consume to quiescence,
   * view fold, stream-table compaction and TTL expiry, restart (a fresh
   * engine over the same metaDir, optionally after a crash between the last
   * view write and its commit), a crash at one durable step of every fold
@@ -45,11 +46,19 @@ class EngineModelSpec extends SparkSpec {
     2 -> Gen.oneOf(Points).map(FoldCrash(_)),
     1 -> Gen.const(Recreate))
 
-  private val stepsGen: Gen[List[Step]] = for {
+  /** A fold cadence (2–5) and the steps, which end in a FoldCrash on
+    * either side of the pointer flip, where the pointer and the fold's
+    * marker can disagree. Under a cadence of c the newest combiner batch
+    * is an unfolded `b<stamp>` dir at c − 1 of c batch ids: the state in
+    * which a fold marker written after the flip lets the restart's replay
+    * count that batch twice. */
+  private val stepsGen: Gen[(Int, List[Step])] = for {
     first <- Gen.choose(5, 30).map(Put(_))
     n <- Gen.choose(3, 7)
     rest <- Gen.listOfN(n, stepGen)
-  } yield first :: rest
+    last <- Gen.oneOf("markers", "flip").map(FoldCrash(_))
+    every <- Gen.choose(2, 5)
+  } yield (every, first :: rest ::: List(last))
 
   private val Combiner = "SELECT k, count(*) AS n, sum(v) AS s FROM ms GROUP BY k"
   private val StatePath = "SELECT k, count(*) AS n, avg(v) AS a FROM ms GROUP BY k"
@@ -80,14 +89,14 @@ class EngineModelSpec extends SparkSpec {
   /** Run one step sequence on a fresh metaDir, or on the legacy one;
     * throws on the first step after which a view or the stream table
     * differs from the reference. */
-  private def run(steps: List[Step], legacy: Boolean = false): Unit = {
+  private def run(steps: List[Step], legacy: Boolean = false, every: Int = 2): Unit = {
     val (root, meta) =
       if (legacy) legacyRun() else (tmpDir("em-root"), tmpDir("em-meta"))
     val dir = s"$root/s"
     new java.io.File(dir).mkdirs()
     def begin(e: KinesisEngine): Int = e.consumeBegin("ep", "s", "ms", format = "csv",
       delimiter = ",", batchsize = 6)
-    var eng = new KinesisEngine(spark, meta, autoCompactEvery = 2)
+    var eng = new KinesisEngine(spark, meta, autoCompactEvery = every)
     eng.addEndpoint("ep", "r", url = root)
     var puts = 0L
     var id =
@@ -120,7 +129,7 @@ class EngineModelSpec extends SparkSpec {
               f.toPath.resolveSibling(s".${f.getName}.crc"))
           }
       }
-      eng = new KinesisEngine(spark, meta, autoCompactEvery = 2)
+      eng = new KinesisEngine(spark, meta, autoCompactEvery = every)
       eng.consumeBeginAll()
     }
     def check(step: Step): Unit = if (puts > 0) {
@@ -178,7 +187,11 @@ class EngineModelSpec extends SparkSpec {
   }
 
   test("random put/consume/fold/restart/re-create sequences keep both view paths equal to a batch recomputation") {
-    val prop = Prop.forAll(stepsGen) { steps => run(steps); true }
+    // only the steps shrink; the cadence stays
+    val prop = Prop.forAllShrink(stepsGen,
+      (c: (Int, List[Step])) => Shrink.shrink(c._2).map(c._1 -> _)) {
+      case (every, steps) => run(steps, every = every); true
+    }
     val res = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(4)
       .withInitialSeed(Seed(20261018L)), prop)

@@ -1,9 +1,8 @@
 #!/usr/bin/env python3
 """Operator-atlas generator (r20, VERDICT r19 next-round #6): one table
 mapping every declared query key to the things the judge reconstructs
-each round by hand — source location, oracle coverage, the bench
-payload code (BenchGuards.tokenDict form, for reading BENCH_r*.json),
-and the 10x rehearsal wall-times + scaling exponent.
+each round by hand — source location, oracle coverage, and the 10x
+rehearsal wall-times + scaling exponent.
 
 Inputs: the two rehearsal logs written by tools/rehearse.sh
 (/tmp/rehearse_sf0.1.log, /tmp/rehearse_graft_full10.log). Run AFTER
@@ -17,28 +16,7 @@ import os
 import re
 import sys
 
-# Mirror of BenchGuards.tokenDict (append-only; keep in sync — the
-# BenchGuardSpec dict test pins the Scala side, and the atlas prints the
-# codes only as a reading aid for archived artifacts).
-TOKEN_DICT = {
-    "similarity": "S", "dedup": "D", "window": "W", "indexed": "X",
-    "sketch": "K", "ivfpq": "Q", "funcs": "F", "join": "J",
-    "distinct": "T", "split": "P", "multi": "M", "contam": "C",
-    "percentile": "E", "leakfree": "L", "decontam": "N",
-    "spans": "Z", "audit": "A", "session": "O", "quality": "Y",
-    "mixture": "U", "string": "G", "sample": "B", "cluster": "V",
-    "stream": "R",
-    "minhash": "H", "bucketed": "I", "media": "HA", "phash": "HB",
-    "pairs": "HC", "audiofp": "HD", "coverage": "HE", "vocab": "HF",
-    "decode": "HG", "trained": "HH", "segment": "HI",
-}
-
 ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-
-
-def enc(name: str) -> str:
-    toks = name[2:].split("_")
-    return "_".join(TOKEN_DICT.get(t, t) for t in toks)
 
 
 def locations() -> dict:
@@ -72,8 +50,8 @@ def main():
     ms1, ms10 = bench_ms(log1), bench_ms(log10)
     locs = locations()
     keys = sorted(locs)
-    print("| query | source | oracle | bench code | 1x ms | 10x ms | exp |")
-    print("|---|---|---|---|---|---|---|")
+    print("| query | source | oracle | 1x ms | 10x ms | exp |")
+    print("|---|---|---|---|---|---|")
     for q in keys:
         a, b = ms1.get(q), ms10.get(q)
         # ADVICE r20 #5: distinguish missing (None) from a legitimate 0 ms
@@ -85,7 +63,7 @@ def main():
             exp = "—"
         orc = ("shared CTE" if q.endswith(("indexed", "_bucketed"))
                else "DuckDB")
-        print(f"| {q} | {locs[q]} | {orc} | `{enc(q)}` | "
+        print(f"| {q} | {locs[q]} | {orc} | "
               f"{a if a is not None else '—'} | "
               f"{b if b is not None else '—'} | {exp} |")
     missing = [q for q in ms1 if q not in locs]
