@@ -82,6 +82,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   * Appends wait only for that last step, never for the rewrite, and
   * readers never observe a partial version.
   *
+  * Durable local writes fork no process: the engine names
+  * [[LocalCheckpointFileManager]] as the session's checkpoint file manager
+  * when the session names none, so the offsets WAL, the commit log and
+  * state files go through java.nio, and its parquet writes set file modes
+  * through [[ForkFreeLocalFileSystem]] (a write option, not a session
+  * setting).
+  *
   * Catalog durability: endpoints, consumers, stream schemas, SQL-declared
   * views AND sliding views all persist under metaDir (format-versioned
   * TSV — an unversioned/older metaDir fails fast instead of mis-decoding)
@@ -140,6 +147,16 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
 
   Files.createDirectories(Paths.get(metaDir))
   loadCatalog()
+
+  // Checkpoint logs and state files through java.nio, unless the session
+  // already names a manager.
+  Option(spark.sessionState.newHadoopConf().get(LocalCheckpointFileManager.Key)) match {
+    case None =>
+      spark.conf.set(LocalCheckpointFileManager.Key, classOf[LocalCheckpointFileManager].getName)
+    case Some(c) if c != classOf[LocalCheckpointFileManager].getName =>
+      log.info(s"${LocalCheckpointFileManager.Key} is set to $c; leaving it")
+    case _ =>
+  }
 
   // --- catalog persistence (the reference's endpoints/consumers tables
   // plus stream schemas and SQL view definitions,
@@ -956,6 +973,14 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     }
   }
 
+  /** `df.write` through [[ForkFreeLocalFileSystem]]: Spark merges write
+    * options into the write job's Hadoop conf, so the committer and the
+    * executor-side writers set file modes without forking `chmod`. The
+    * session's cached `file` filesystem is untouched. */
+  private def localWrite(df: DataFrame) = df.write
+    .option("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    .option("fs.file.impl.disable.cache", "true")
+
   // The append lock and the rewrite lock of each versioned dir (a view's
   // delta log, a stream table's data), by name.
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -1189,7 +1214,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         "spark.job.interruptOnCancel")
       val prior = groupProps.map(k => k -> sc.getLocalProperty(k))
       sc.setJobGroup(s"graft-fold:$name", s"fold view $name")
-      try keep(merged).write.mode("overwrite").parquet(next.toString)
+      try localWrite(keep(merged)).mode("overwrite").parquet(next.toString)
       finally prior.foreach { case (k, p) => sc.setLocalProperty(k, p) }
     }
   }
@@ -1321,7 +1346,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         tableRows(relation, cur.resolve(boundary), cur, cut)
           .filter(col("arrival_timestamp") >= lit(cutTs))
           .repartition(targetPartitions)
-          .write.mode("overwrite")
+          .pipe(localWrite).mode("overwrite")
           .parquet(next.resolve(boundary).toString)
     }
   }
@@ -1341,7 +1366,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
         // keyed repartition: one task (→ one file) per date, up to
         // targetPartitions tasks — compaction output stays partitioned
         .repartition(targetPartitions, col("__arrival_date"))
-        .write.partitionBy("__arrival_date").mode("overwrite")
+        .pipe(localWrite).partitionBy("__arrival_date").mode("overwrite")
         .parquet(next.toString)
     }
 
@@ -1360,7 +1385,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     tableDir(relation).rewrite(_.startsWith(target + "/")) { (cur, snap, next) =>
       tableRows(relation, cur.resolve(target), cur, snap)
         .repartition(targetPartitions)
-        .write.mode("overwrite")
+        .pipe(localWrite).mode("overwrite")
         .parquet(next.resolve(target).toString)
     }
   }
@@ -1602,7 +1627,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
               // TTL expiry O(dropped data) — see expireStreamTable
               batch.withColumn("__arrival_date",
                   to_date(col("arrival_timestamp")))
-                .write.partitionBy("__arrival_date").mode("append")
+                .pipe(localWrite).partitionBy("__arrival_date").mode("append")
                 .parquet(tableDataDir(relation))
             }
             // online small-files maintenance: fold ONLY the active (max
@@ -1701,7 +1726,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                 val packed = batch.coalesce(ViewDeltaFiles)
                 viewLock(vname).synchronized {
                   packed.withColumn("__batch", lit(stamped))
-                    .write.mode("append").parquet(viewDeltaDir(vname))
+                    .pipe(localWrite).mode("append").parquet(viewDeltaDir(vname))
                 }
               // Partials and transform rows have no newest-wins merge
               // to collapse a replay, so idempotence comes from the
@@ -1717,7 +1742,7 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
                   else batch.withColumn("__batch", lit(stamped))
                 viewLock(vname).synchronized {
                   if (stamped > foldedThrough(vname))
-                    rows.write.mode("overwrite")
+                    localWrite(rows).mode("overwrite")
                       .parquet(s"${viewDeltaDir(vname)}/b$stamped")
                 }
             }
