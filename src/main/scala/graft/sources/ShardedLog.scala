@@ -55,10 +55,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    batch), not O(total shard file);
   *  - `reportLatestOffset` advances a monotone in-memory [[TailCache]] by
   *    scanning only bytes appended since the previous call;
+  *  - `Trigger.AvailableNow` takes its snapshot from that same cache, so
+  *    the first `reportLatestOffset` of a backfill scans nothing new;
   *  - each `PartitionReader` seeks straight to its slice's first byte —
   *    cumulative read cost over a stream's lifetime is O(data);
-  *  - driver-side scans ([[scanForward]]) walk record *headers* and skip
-  *    payloads, so offset planning costs O(records), not O(bytes).
+  *  - driver-side scans ([[scanForward]]) read each shard sequentially in
+  *    64 KiB buffer windows, take the two length fields of each record at
+  *    computed offsets and jump over a payload that runs past the window,
+  *    so offset planning costs O(records) of CPU, not O(bytes); the
+  *    executors' reader decodes records from the same kind of window.
   *
   * Framing safety: every shard file begins with the 8-byte magic
   * `GRAFTLG3`; a file in any other framing (the v1 escaped-text format, a
@@ -179,20 +184,6 @@ object ShardedLog {
     * driver-side row collection. */
   val bytesSpliced = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fail fast on any file not in GRAFTLG3 framing (v1 escaped-text logs,
-    * foreign files) — mirrors the engine's catalog version check. Empty
-    * files pass: the header is stamped with the first append. */
-  private def verifyMagic(file: java.io.File): Unit = {
-    if (file.length() == 0L) return
-    val b = new Array[Byte](MAGIC.length)
-    val raf = new java.io.RandomAccessFile(file, "r")
-    try {
-      if (file.length() < HEADER) throw badFraming(file)
-      raf.readFully(b)
-    } finally raf.close()
-    if (!java.util.Arrays.equals(b, MAGIC)) throw badFraming(file)
-  }
-
   private def badFraming(file: java.io.File) = new IllegalStateException(
     s"$file: unrecognized shard-log framing (expected ${HEADER}-byte " +
       "'GRAFTLG3' magic). This log was written by an incompatible graft " +
@@ -232,40 +223,75 @@ object ShardedLog {
   /** Scan `file` forward from byte `fromBytes`, counting whole records,
     * stopping after `maxRecs` records or EOF. Returns the position after
     * the last complete record (a trailing partial record — e.g. a
-    * concurrent writer mid-append — is never included). Walks headers and
-    * skips payload bytes. */
+    * concurrent writer mid-append — is never included). Reads the two
+    * length fields of each record and jumps over its payloads. */
   def scanForward(file: java.io.File, fromBytes: Long, maxRecs: Long): ShardPos = {
     val len = file.length() // stable snapshot under concurrent appends
     if (len == 0L || maxRecs <= 0) return ShardPos(fromBytes, 0L)
-    // position 0 is the logical start: verify the magic once, then begin
-    // at the first record boundary behind it
-    val start = if (fromBytes == 0L) { verifyMagic(file); HEADER } else fromBytes
-    if (start >= len) return ShardPos(start, 0L)
-    val in = new java.io.FileInputStream(file)
+    val fr = new Frames(file)
     try {
-      in.getChannel.position(start)
-      val din = new java.io.DataInputStream(new java.io.BufferedInputStream(in, 1 << 16))
+      // position 0 is the logical start: verify the magic once (fail fast
+      // on any other framing, like the engine's catalog version check),
+      // then begin at the first record boundary behind it
+      val start = if (fromBytes == 0L) {
+        val i = if (len < HEADER) -1 else fr.at(0L, MAGIC.length)
+        if (i < 0 || !java.util.Arrays.equals(fr.bytes(i, MAGIC.length), MAGIC))
+          throw badFraming(file)
+        HEADER
+      } else fromBytes
       var pos = start
-      var last = start
       var recs = 0L
       var ok = true
       while (ok && recs < maxRecs && pos + 12 <= len) {
-        din.readLong() // arrival ts (skipped)
-        val pkLen = din.readInt()
+        val i = fr.at(pos, 12)
+        val pkLen = if (i < 0) -2 else fr.int(i + 8)
         val pkSkip = math.max(pkLen, 0)
         if (pkLen < -1 || pos + 12 + pkSkip + 4 > len) ok = false
         else {
-          din.skipNBytes(pkSkip)
-          val dataLen = din.readInt()
-          val dSkip = math.max(dataLen, 0)
-          val end = pos + 12 + pkSkip + 4 + dSkip
+          val j = fr.at(pos + 12 + pkSkip, 4)
+          val dataLen = if (j < 0) -2 else fr.int(j)
+          val end = pos + 16 + pkSkip + math.max(dataLen, 0)
           if (dataLen < -1 || end > len) ok = false
-          else { din.skipNBytes(dSkip); pos = end; last = end; recs += 1 }
+          else { pos = end; recs += 1 }
         }
       }
-      bytesScanned.addAndGet(last - start)
-      ShardPos(last, recs)
-    } finally in.close()
+      bytesScanned.addAndGet(pos - start)
+      ShardPos(pos, recs)
+    } finally fr.close()
+  }
+
+  /** A read window over one shard file: one heap buffer refilled by
+    * positional channel reads, so scans and readers decode records from
+    * memory rather than with a stream call per field. */
+  private[sources] final class Frames(val file: java.io.File) extends java.io.Closeable {
+    private val ch = java.nio.channels.FileChannel.open(file.toPath)
+    private var buf = java.nio.ByteBuffer.allocate(1 << 16)
+    private var base = 0L // file position of buffer index 0
+    private var valid = 0 // bytes of the file held from index 0
+
+    /** Buffer index of file position `pos` with `n` bytes valid behind it,
+      * or −1 when the file ends first. A refill keeps the unread tail and
+      * grows the buffer only for a record larger than it. */
+    def at(pos: Long, n: Int): Int = {
+      val off = pos - base
+      if (off >= 0 && off + n <= valid) return off.toInt
+      val keep = if (off >= 0 && off < valid) valid - off.toInt else 0
+      val dst = if (n > buf.capacity) java.nio.ByteBuffer.allocate(n) else buf
+      System.arraycopy(buf.array, valid - keep, dst.array, 0, keep)
+      buf = dst; base = pos; valid = keep
+      while (valid < n) {
+        buf.position(valid)
+        val r = ch.read(buf, base + valid)
+        if (r < 0) return -1
+        valid += r
+      }
+      0
+    }
+
+    def int(i: Int): Int = buf.getInt(i)
+    def long(i: Int): Long = buf.getLong(i)
+    def bytes(i: Int, n: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf.array, i, i + n)
+    override def close(): Unit = ch.close()
   }
 
   /** Arrival timestamp (epoch millis) of the record starting at `bytePos`
@@ -407,7 +433,7 @@ class ShardedLogMicroBatchStream(path: String, batchsize: Long, startPos: String
   @volatile private var availableNowCap: Option[Map[String, ShardPos]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(ShardedLog.latestPositions(path))
+    availableNowCap = Some(tailCache.advance())
 
   override def initialOffset(): Offset = {
     val init = startPos.toLowerCase match {
@@ -499,14 +525,15 @@ object ShardedLogReaderFactory extends PartitionReaderFactory {
     val slices = partition.asInstanceOf[ShardedLogPartition].slices
     new PartitionReader[InternalRow] {
       private var sliceIdx = -1
-      private var din: java.io.DataInputStream = _
-      private var remaining = 0L
+      private var frames: ShardedLog.Frames = _
+      private var pos = 0L
+      private var until = 0L
       private var seq = 0L
       private var shardName: UTF8String = _
       private var row: InternalRow = _
 
       private def openNext(): Boolean = {
-        if (din != null) { din.close(); din = null }
+        if (frames != null) { frames.close(); frames = null }
         sliceIdx += 1
         if (sliceIdx >= slices.length) return false
         val p = slices(sliceIdx)
@@ -514,47 +541,50 @@ object ShardedLogReaderFactory extends PartitionReaderFactory {
         // positions; fromBytes 0 is the logical start, i.e. the first
         // record boundary behind the magic header (verified driver-side
         // by the scanForward that planned these bounds)
-        val startByte = if (p.fromBytes == 0L) ShardedLog.HEADER else p.fromBytes
-        val in = new java.io.FileInputStream(new java.io.File(p.path, p.shard))
-        in.getChannel.position(startByte)
-        din = new java.io.DataInputStream(new java.io.BufferedInputStream(in, 1 << 16))
-        remaining = p.untilBytes - startByte
+        pos = if (p.fromBytes == 0L) ShardedLog.HEADER else p.fromBytes
+        until = p.untilBytes
+        frames = new ShardedLog.Frames(new java.io.File(p.path, p.shard))
         seq = p.fromRec - 1
         shardName = UTF8String.fromString(p.shard.stripSuffix(".log"))
         true
       }
 
-      /** Read one whole record from the current slice, or null at its end.
+      private def need(at: Long, n: Int): Int = {
+        val i = frames.at(at, n)
+        if (i < 0) throw new java.io.EOFException(
+          s"${frames.file}: record at byte $pos runs past the end of the file")
+        i
+      }
+
+      /** Decode one whole record of the current slice, or null at its end.
         * Both slice bounds sit on record boundaries (scanForward-derived),
-        * so remaining is 0 or ≥ one 16-byte header at every boundary. */
+        * so what remains is 0 or ≥ one 16-byte header at every boundary.
+        * Key and data are copied out: a row must not alias the window. */
       private def readRecord(): InternalRow = {
-        if (remaining < 16) return null
-        val ts = din.readLong()
-        val pkLen = din.readInt()
-        val pk =
-          if (pkLen < 0) null
-          else {
-            val b = new Array[Byte](pkLen); din.readFully(b)
-            UTF8String.fromBytes(b)
-          }
-        val dataLen = din.readInt()
+        if (until - pos < 16) return null
+        val i = need(pos, 12)
+        val ts = frames.long(i)
+        val pkLen = frames.int(i + 8)
+        val pkSkip = math.max(pkLen, 0)
+        val j = need(pos + 12, pkSkip + 4)
+        val pk = if (pkLen < 0) null else UTF8String.fromBytes(frames.bytes(j, pkLen))
+        val dataLen = frames.int(j + pkSkip)
         val data =
-          if (dataLen < 0) null
-          else { val b = new Array[Byte](dataLen); din.readFully(b); b }
-        remaining -= 16L + math.max(pkLen, 0) + math.max(dataLen, 0)
+          if (dataLen < 0) null else frames.bytes(need(pos + 16 + pkSkip, dataLen), dataLen)
+        pos += 16L + pkSkip + math.max(dataLen, 0)
         seq += 1
         InternalRow(shardName, seq, pk, data, ts * 1000L)
       }
 
       override def next(): Boolean = {
-        row = if (din == null) null else readRecord()
+        row = if (frames == null) null else readRecord()
         while (row == null && openNext()) row = readRecord()
         row != null
       }
 
       override def get(): InternalRow = row
 
-      override def close(): Unit = if (din != null) din.close()
+      override def close(): Unit = if (frames != null) frames.close()
     }
   }
 }

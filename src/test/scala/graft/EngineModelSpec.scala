@@ -123,11 +123,7 @@ class EngineModelSpec extends SparkSpec {
         val commits = new java.io.File(s"$meta/checkpoints/$id/$v/commits")
         Option(commits.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.forall(_.isDigit)).maxByOption(_.getName.toLong)
-          .foreach { f =>
-            java.nio.file.Files.delete(f.toPath)
-            java.nio.file.Files.deleteIfExists(
-              f.toPath.resolveSibling(s".${f.getName}.crc"))
-          }
+          .foreach(f => java.nio.file.Files.delete(f.toPath))
       }
       eng = new KinesisEngine(spark, meta, autoCompactEvery = every)
       eng.consumeBeginAll()

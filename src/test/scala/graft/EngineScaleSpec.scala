@@ -457,7 +457,6 @@ class EngineScaleSpec extends SparkSpec {
     val last = new java.io.File(commits.toString).listFiles()
       .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong).toPath
     java.nio.file.Files.delete(last)
-    java.nio.file.Files.deleteIfExists(last.resolveSibling(s".${last.getFileName}.crc"))
     eng.compactViewTable("fi_tx")
     eng.consumeBegin("ep", "s", "fi_stream", format = "csv", delimiter = ",",
       batchsize = 100000)
@@ -821,10 +820,6 @@ class EngineScaleSpec extends SparkSpec {
       finally s.close()
     }
     java.nio.file.Files.delete(toDrop)
-    // ChecksumFileSystem keeps a .N.crc sibling; a stale one makes the
-    // replayed commit's rename fail as a phantom concurrent-writer error
-    java.nio.file.Files.deleteIfExists(
-      toDrop.resolveSibling("." + toDrop.getFileName + ".crc"))
     val eng2 = new KinesisEngine(spark, meta)
     // transform views are closures → re-registered like application code
     eng2.createContinuousTransform("ix_view", "ix_stream",
@@ -1100,8 +1095,6 @@ class EngineScaleSpec extends SparkSpec {
       finally s.close()
     }
     java.nio.file.Files.delete(toDrop)
-    java.nio.file.Files.deleteIfExists(
-      toDrop.resolveSibling("." + toDrop.getFileName + ".crc"))
     val eng2 = new KinesisEngine(spark, meta) // SQL view restores from catalog
     eng2.consumeBeginAll()
     eng2.processAllAvailable()
@@ -1425,7 +1418,6 @@ class EngineScaleSpec extends SparkSpec {
       val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
         .maxBy(_.getName.toLong).toPath
       java.nio.file.Files.delete(last)
-      java.nio.file.Files.deleteIfExists(last.resolveSibling(s".${last.getFileName}.crc"))
     }
     def replay(step: String): Unit = {
       val e = mkEngine(meta, root, "rf_stream", "rf_view")

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * scalatestplus bridge in the offline dependency set). */
 class PropertySpec extends AnyFunSuite {
 
-  private def check(name: String, p: Prop): Unit = {
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
+  private def check(name: String, p: Prop, n: Int = 200): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
     assert(res.passed, s"$name: $res")
   }
 
@@ -67,6 +67,137 @@ class PropertySpec extends AnyFunSuite {
         (gotData == null) == (data == null) &&
         (data == null || java.util.Arrays.equals(gotData, data))
     })
+  }
+
+  /** The shard-log walker of format v3 before the scan read buffer
+    * windows: one `DataInputStream` call per field. Kept as the reference
+    * for [[ShardedLog.scanForward]]. */
+  private def referenceScan(file: java.io.File, fromBytes: Long,
+                            maxRecs: Long): ShardedLog.ShardPos = {
+    val len = file.length()
+    if (len == 0L || maxRecs <= 0) return ShardedLog.ShardPos(fromBytes, 0L)
+    val start = if (fromBytes == 0L) ShardedLog.HEADER else fromBytes
+    if (start >= len) return ShardedLog.ShardPos(start, 0L)
+    val din = new java.io.DataInputStream(
+      new java.io.BufferedInputStream(new java.io.FileInputStream(file), 1 << 16))
+    try {
+      din.skipNBytes(start)
+      var pos = start
+      var recs = 0L
+      var ok = true
+      while (ok && recs < maxRecs && pos + 12 <= len) {
+        din.readLong()
+        val pkLen = din.readInt()
+        val pkSkip = math.max(pkLen, 0)
+        if (pkLen < -1 || pos + 12 + pkSkip + 4 > len) ok = false
+        else {
+          din.skipNBytes(pkSkip)
+          val dataLen = din.readInt()
+          val dSkip = math.max(dataLen, 0)
+          val end = pos + 12 + pkSkip + 4 + dSkip
+          if (dataLen < -1 || end > len) ok = false
+          else { din.skipNBytes(dSkip); pos = end; recs += 1 }
+        }
+      }
+      ShardedLog.ShardPos(pos, recs)
+    } finally din.close()
+  }
+
+  test("buffer-window scan and reader equal the per-field walker across window edges") {
+    import graft.sources.{ShardedLogPartition, ShardedLogReaderFactory, ShardedLogSlice}
+    // field sizes straddle the 64 KiB window, and one exceeds it (200 KiB);
+    // None is a null field, Some(0) an empty one
+    val sizeGen = Gen.frequency(
+      4 -> Gen.choose(0, 64), 3 -> Gen.choose(1000, 30000), 1 -> Gen.const(200 * 1024))
+    val fieldGen = Gen.frequency(1 -> Gen.const(Option.empty[Int]), 6 -> sizeGen.map(Some(_)))
+    val recGen = for (pk <- fieldGen; d <- fieldGen) yield (pk, d)
+    // the last record stays small so that every byte of it can be cut
+    val lastGen = for {
+      pk <- Gen.choose(0, 40); d <- Gen.option(Gen.choose(0, 1500))
+    } yield (Option(pk), d)
+    val logGen = for {
+      n <- Gen.choose(0, 10); recs <- Gen.listOfN(n, recGen); last <- lastGen
+      corrupt <- Gen.frequency(3 -> Gen.const(None),
+        1 -> Gen.zip(Gen.choose(0, n), Gen.oneOf(true, false)).map(Some(_)))
+    } yield (recs :+ last, corrupt)
+    check("window-vs-reference", Prop.forAll(logGen) { case (spec, corrupt) =>
+      val recs = spec.zipWithIndex.map { case ((pk, d), k) =>
+        (pk.map(m => Iterator.tabulate(m)(j => ('a' + (j + k) % 26).toChar).mkString).orNull,
+          d.map(m => Array.tabulate[Byte](m)(j => (j * 31 + k).toByte)).orNull,
+          1700000000000L + k)
+      }
+      // framed by hand so that each record has its own arrival time and
+      // one may carry a corrupt length (−5) in its key or data field
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      out.write(ShardedLog.MAGIC)
+      recs.zipWithIndex.foreach { case ((pk, d, ts), k) =>
+        corrupt match {
+          case Some((`k`, inKey)) =>
+            out.writeLong(ts)
+            if (inKey) out.writeInt(-5) else { out.writeInt(-1); out.writeInt(-5) }
+          case _ => ShardedLog.frameRecord(out, ts, pk, d)
+        }
+      }
+      out.flush()
+      val dir = java.nio.file.Files.createTempDirectory("window")
+      val f = dir.resolve("shard-0.log").toFile
+      java.nio.file.Files.write(f.toPath, bos.toByteArray)
+      try {
+        val full = referenceScan(f, 0L, Long.MaxValue)
+        val n = full.recs
+        // record starts, from the reference walker
+        val starts = (0L to n).map(k => referenceScan(f, 0L, k).bytes)
+          .map(b => if (b == 0L) ShardedLog.HEADER else b)
+        val scans = for {
+          from <- 0L +: starts
+          max <- Seq(1L, 7L, n, Long.MaxValue)
+        } yield (from, max)
+        val scansAgree = scans.forall { case (from, max) =>
+          ShardedLog.scanForward(f, from, max) == referenceScan(f, from, max)
+        }
+        val stopsAtCorrupt = corrupt.forall { case (k, _) => n == k }
+        // the reader returns exactly the appended rows: one slice from mid
+        // file, and the whole log as a partition of several slices
+        def read(slices: Seq[ShardedLogSlice]) = {
+          val r = ShardedLogReaderFactory.createReader(ShardedLogPartition(slices))
+          val rows = Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+            val row = r.get()
+            (row.getLong(1),
+              if (row.isNullAt(2)) null else row.getUTF8String(2).toString,
+              if (row.isNullAt(3)) null else row.getBinary(3).toSeq,
+              row.getLong(4))
+          }.toList
+          r.close(); rows
+        }
+        val want = recs.take(n.toInt).zipWithIndex.map { case ((pk, d, ts), k) =>
+          (k.toLong, pk, if (d == null) null else d.toSeq, ts * 1000L)
+        }
+        val mid = (n / 2).toInt
+        val cuts = Seq(0L, starts(mid), starts((n * 3 / 4).toInt), full.bytes).distinct
+        val sliced = cuts.zip(cuts.tail).zipWithIndex.map { case ((a, b), i) =>
+          ShardedLogSlice(dir.toString, "shard-0.log", a,
+            b, if (i == 0) 0L else starts.indexOf(a).toLong)
+        }
+        val readsAgree =
+          read(Seq(ShardedLogSlice(dir.toString, "shard-0.log", starts(mid),
+            full.bytes, mid.toLong))) == want.drop(mid) &&
+            read(sliced) == want
+        // cutting the file anywhere inside its last record excludes it
+        val cutsExclude = corrupt.nonEmpty || n == 0 || {
+          val ch = java.nio.channels.FileChannel.open(f.toPath,
+            java.nio.file.StandardOpenOption.WRITE)
+          try (full.bytes - 1 to starts(n.toInt - 1) by -1).forall { len =>
+            ch.truncate(len)
+            ShardedLog.scanForward(f, 0L, Long.MaxValue) ==
+              ShardedLog.ShardPos(starts(n.toInt - 1), n - 1)
+          } finally ch.close()
+        }
+        scansAgree && stopsAtCorrupt && readsAgree && cutsExclude
+      } finally {
+        f.delete(); java.nio.file.Files.delete(dir)
+      }
+    }, n = 60)
   }
 
   test("legacy bare-number offsets and foreign log framing fail fast") {

@@ -669,6 +669,25 @@ class StreamingSpec extends SparkSpec {
       .head().getLong(2) === 27L, "checkpointed seqnum covers both drains")
   }
 
+  test("availableNow backfill scans the log twice: one tail snapshot plus the admitted windows") {
+    // The snapshot is the stream's own tail cache, so the first
+    // reportLatestOffset finds nothing new to scan. A consumer with no
+    // view runs only the table query; a third full pass (a separate
+    // snapshot walk) would read 3·B here.
+    val root = tmpDir("kin-anow-scan"); val meta = tmpDir("kin-anow-scan-meta")
+    (0 until 3).foreach { s =>
+      ShardedLog.append(s"$root/s", s, (0 until 400).map(i => (s"k$i", s"payload-$s-$i")))
+    }
+    val logBytes = ShardedLog.shardFiles(s"$root/s").map(_.length() - ShardedLog.HEADER).sum
+    val eng = new KinesisEngine(spark, meta)
+    eng.addEndpoint("ep", "r", url = root)
+    eng.createStream("sc_stream", StructType(Seq(StructField("payload", StringType))))
+    val before = ShardedLog.bytesScanned.get()
+    eng.consumeBackfill("ep", "s", "sc_stream", format = "text", batchsize = 150)
+    assert(ShardedLog.bytesScanned.get() - before === 2 * logBytes)
+    assert(eng.streamTable("sc_stream").count() === 1200L)
+  }
+
   test("chaos: shard split between two AvailableNow drains loses and duplicates nothing") {
     // r14 (judge item 7): resharding under live consumption. The Kinesis
     // split model: the parent shard takes its final records and seals,
